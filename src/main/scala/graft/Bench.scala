@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -63,7 +64,7 @@ object Bench {
         .select(col("k"), xxhash64(col("t")).as("h"))
         .groupBy("k").agg(sort_array(collect_set(col("h"))).as("hs"))
         .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // SPILL/MEMORY TELEMETRY (round 13): per-query shuffle-spill and peak
     // execution memory, so super-linear scale ratios can be ADJUDICATED
     // from numbers ("the box spilled") instead of inferred — the r12
@@ -94,7 +95,7 @@ object Bench {
         val bus = spark.sparkContext.getClass.getMethod("listenerBus")
           .invoke(spark.sparkContext)
         bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch { case _: Throwable => Thread.sleep(100) }
+      } catch { case NonFatal(_) => Thread.sleep(100) }
     // Crashed queries must not masquerade as ~0.08 s successes (round 8: 24
     // analysis failures flattered the total). Track them and report a
     // "failed" list in both the stdout line and bench_detail.json.
@@ -108,7 +109,7 @@ object Bench {
       // count() Catalyst prunes unreferenced aggregates and eliminates the
       // final sort, under-measuring the query.
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         failed += name
         System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: " +
           String.valueOf(e.getMessage).take(300))
@@ -159,7 +160,7 @@ object Bench {
         s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullMap,"failed":$failedArr,"spill_mb":$metricsMap,"sf":"$sfTag"}"""
       java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
         (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // filtered profiling runs (incl. the sf100 probes) still need the
     // numbers somewhere: a sidecar file that full runs never read
     else try {
@@ -167,7 +168,7 @@ object Bench {
         s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullMap,"failed":$failedArr,"spill_mb":$metricsMap,"sf":"$sfTag"}"""
       java.nio.file.Files.write(java.nio.file.Paths.get("bench_filtered_detail.json"),
         (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // Failed names outrank timing detail on the wire: cap the failed list at
     // 10 names (count is always exact) and fit the heaviest queries in what
     // budget remains.

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -95,7 +97,7 @@ object PhashGateDrive {
           f.delete(): Unit
         }
         rm(new java.io.File(s"$work/$p"))
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }
     spark.stop()
   }

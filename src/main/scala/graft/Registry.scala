@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One named operator: a Spark implementation plus (optionally) the
@@ -76,7 +78,7 @@ object Registry {
     if (lastCached.size > CacheTagCap) lastCached.clear()
     val prev = lastCached.put(sessionToken(s) + "|" + tag, df)
     if (prev != null && (prev ne df))
-      try prev.unpersist(blocking = false) catch { case _: Throwable => () }
+      try prev.unpersist(blocking = false) catch { case NonFatal(_) => () }
     df.cache()
   }
 
@@ -109,7 +111,7 @@ object Registry {
     val buf = transientBcs.remove(sessionToken(s))
     if (buf != null) buf.synchronized {
       buf.foreach(bc =>
-        try bc.unpersist(false) catch { case _: Throwable => () })
+        try bc.unpersist(false) catch { case NonFatal(_) => () })
       buf.clear()
     }
   }
@@ -146,7 +148,7 @@ object Registry {
         }
         n.toString + ":" + maxM
       }
-    } catch { case _: Throwable => "nf" }
+    } catch { case NonFatal(_) => "nf" }
 
   def sessionToken(s: SparkSession): String = sessionTokens.synchronized {
     val hit = sessionTokens.get(s)

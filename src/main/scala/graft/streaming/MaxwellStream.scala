@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.AccumulatorV2
 
 /** Structured-Streaming CDC: the reference pipeline
   * (Maxwell JSON -> RabbitMQ -> `maxwell_event` archive -> `process_events()`
@@ -370,71 +372,117 @@ object MaxwellStream {
   def pkBucket(nBuckets: Int): org.apache.spark.sql.Column =
     pmod(hash(col("database_name"), col("table_name"), col("pk")), lit(nBuckets))
 
-  private def newer(a: StateChange, b: StateChange): StateChange =
-    if (a.ts.getTime > b.ts.getTime ||
-      (a.ts.getTime == b.ts.getTime && a.seq >= b.seq)) a else b
+  /** The replica's on-disk row: one [[StateChange]] per live key, under a
+    * `bucket=<`[[pkBucket]]`>/` directory. Reads pass it to parquet, so no
+    * job is spent inferring the schema from the files. */
+  val replicaSchema: StructType =
+    Encoders.product[StateChange].schema.add("bucket", IntegerType)
+
+  /** Latest change per (database_name, table_name, pk): the row with the
+    * greatest (ts, seq, ord). Maxwell DML `ts` is whole seconds and `seq`
+    * is 0 without an `event_id`, so `ord` settles what (ts, seq) leaves
+    * tied: emission order within a batch, and -1 on rows read back from
+    * the replica, so the batch's change beats the replica's copy. */
+  private def latestPerKey(changes: DataFrame): DataFrame =
+    changes
+      .groupBy("database_name", "table_name", "pk")
+      .agg(max_by(struct(changes.columns.toSeq.map(col): _*),
+        struct(col("ts"), col("seq"), col("ord"))).as("latest"))
+      .select("latest.*")
+
+  /** The set of buckets a job's rows fall in: at most `nBuckets` bits per
+    * task result, however many rows add to it. */
+  private final class BucketSet extends AccumulatorV2[Int, java.util.BitSet] {
+    private val bits = new java.util.BitSet
+    def isZero: Boolean = bits.isEmpty
+    def copy(): BucketSet = { val c = new BucketSet; c.bits.or(bits); c }
+    def reset(): Unit = bits.clear()
+    def add(b: Int): Unit = bits.set(b)
+    def merge(other: AccumulatorV2[Int, java.util.BitSet]): Unit = bits.or(other.value)
+    def value: java.util.BitSet = bits
+  }
 
   /** Idempotent replica maintenance via foreachBatch — a MERGE expressed as
-    * PARTITION-SCOPED rewrite on plain parquet. The replica is laid out as
-    * `bucket=<pmod(hash(db,table,pk), nBuckets)>/` partitions; each
-    * micro-batch:
+    * a BUCKET-SCOPED rewrite on plain parquet, in two Spark jobs per
+    * non-empty batch. The replica is laid out as
+    * `bucket=<pmod(hash(db,table,pk), nBuckets)>/` directories
+    * ([[replicaSchema]]); each call:
     *
-    *  1. reduces to latest-per-key (ties on the whole-second ts broken by
-    *     the event sequence, [[StateChange.seq]]),
-    *  2. computes the set of TOUCHED buckets (a tiny distinct),
-    *  3. reads ONLY those partitions back (partition pruning on `bucket`),
-    *  4. merges, drops tombstones, and dynamic-partition-OVERWRITES only
-    *     the touched buckets; a touched bucket whose keys all died is
-    *     deleted explicitly (dynamic overwrite skips empty partitions).
+    *  1. recovers from a crashed earlier call (below);
+    *  2. JOB 1 reduces the batch to the latest change per key, adds its
+    *     bucket and localCheckpoints it, gathering the touched buckets in
+    *     an accumulator on the way;
+    *  3. JOB 2 reads ONLY the touched buckets back (partition pruning, with
+    *     the fixed schema), merges them with the batch's latest changes,
+    *     drops tombstones and writes the result, partitioned by bucket, to
+    *     the hidden `_staging/` directory of the replica;
+    *  4. swaps on the driver, bucket by bucket: `bucket=b` moves to
+    *     `_old/bucket=b`, then `_staging/bucket=b` moves to `bucket=b`. A
+    *     touched bucket with no survivors is thereby emptied. Then `_old`
+    *     and `_staging` are deleted.
     *
-    * Cost per batch is O(touched buckets), not O(replica) — the round-1
-    * full-directory rewrite died at 100 TB replica size. Size nBuckets so
-    * one bucket ≈ a few hundred MB at the target scale (the merged content
-    * of touched buckets is localCheckpoint-materialized before the
-    * overwrite, since the write replaces the files it read). A
-    * MERGE-capable format (Delta/Iceberg) replaces steps 2–4 with
-    * `MERGE INTO` — this body is the same topology on raw parquet. */
+    * Latest wins on (ts, seq); an equal (ts, seq) is decided by emission
+    * order within the batch (a key's changes leave the stateful operator
+    * in one partition, in order), and a batch change beats the replica's
+    * row. Replaying a batch is therefore a no-op on the buckets it already
+    * reached.
+    *
+    * Crash consistency: a crash can leave a bucket in `_old` whose
+    * replacement never moved in. Recovery, at the top of every call, moves
+    * each `_old/bucket=b` without a `bucket=b` back, then deletes `_old`
+    * and `_staging`; the stream replays the uncommitted batch, and the
+    * merge makes that replay idempotent. Spark's file index skips names
+    * starting with `_`, so readers never see the two hidden directories.
+    *
+    * Cost per batch is O(touched buckets), not O(replica). Size nBuckets so
+    * one bucket ≈ a few hundred MB at the target scale. A MERGE-capable
+    * format (Delta/Iceberg) replaces steps 3–4 with `MERGE INTO` — this
+    * body is the same topology on raw parquet. */
   def applyBatchToReplica(batch: Dataset[StateChange], replicaDir: String,
       nBuckets: Int = 16): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    val cols = Seq("database_name", "table_name", "pk", "op", "state", "ts", "seq")
-    val latest = batch
-      .groupByKey(c => (c.database_name, c.table_name, c.pk))
-      .reduceGroups(newer _)
-      .map(_._2)
-      .localCheckpoint(true)
-    val touched = latest.toDF().select(pkBucket(nBuckets).as("bucket"))
-      .distinct().as[Int].collect().toSeq.sorted
-    if (touched.isEmpty) return
-    val replicaPath = new org.apache.hadoop.fs.Path(replicaDir)
-    val fs = replicaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing =
-      if (fs.exists(replicaPath))
-        spark.read.parquet(replicaDir)
-          .where(col("bucket").isin(touched: _*)) // partition-pruned scan
-          .select(cols.map(col): _*).as[StateChange]
-      else spark.emptyDataset[StateChange]
-    val merged = existing
-      .union(latest)
-      .groupByKey(c => (c.database_name, c.table_name, c.pk))
-      .reduceGroups(newer _)
-      .map(_._2)
-      .filter(c => c.op != "tombstone")
-      .toDF()
-      .withColumn("bucket", pkBucket(nBuckets))
-      .localCheckpoint(true) // materialize before overwriting the files just read
-    merged.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic") // replace touched buckets only
-      .partitionBy("bucket")
-      .parquet(replicaDir)
-    // Dynamic overwrite leaves a partition alone when the new data has no
-    // rows for it — but a TOUCHED bucket with no survivors must be emptied.
-    val survivors = merged.select("bucket").distinct().as[Int].collect().toSet
-    touched.filterNot(survivors).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(replicaPath, s"bucket=$b"), true)
+    val root = new Path(replicaDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = new Path(root, "_staging")
+    val old = new Path(root, "_old")
+    def rename(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to)) throw new java.io.IOException(s"cannot rename $from to $to")
+    def cleanUp(): Unit = { fs.delete(old, true); fs.delete(staging, true) }
+
+    if (fs.exists(old)) fs.listStatus(old).foreach { moved =>
+      val live = new Path(root, moved.getPath.getName)
+      if (!fs.exists(live)) rename(moved.getPath, live)
     }
+    cleanUp()
+
+    val buckets = new BucketSet
+    spark.sparkContext.register(buckets)
+    val touch = udf { (b: Int) => buckets.add(b); b }.asNondeterministic()
+    val latest = latestPerKey(batch.withColumn("ord", monotonically_increasing_id()))
+      .withColumn("bucket", touch(pkBucket(nBuckets)))
+      .localCheckpoint(true)
+    val touched = buckets.value.stream().toArray.toSeq
+    if (touched.isEmpty) return
+
+    val merged =
+      if (!fs.exists(root)) latest
+      else latestPerKey(spark.read.schema(replicaSchema).parquet(replicaDir)
+        .where(col("bucket").isin(touched: _*)) // partition-pruned scan
+        .withColumn("ord", lit(-1L))
+        .unionByName(latest))
+    merged
+      .where(col("op") =!= "tombstone")
+      .select(replicaSchema.fieldNames.toSeq.map(col): _*)
+      .write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
+
+    fs.mkdirs(old)
+    touched.foreach { b =>
+      val live = new Path(root, s"bucket=$b")
+      val staged = new Path(staging, s"bucket=$b")
+      if (fs.exists(live)) rename(live, new Path(old, live.getName))
+      if (fs.exists(staged)) rename(staged, live)
+    }
+    cleanUp()
   }
 
   /** STRICT apply mode — exact reference parity with
@@ -497,7 +545,7 @@ object MaxwellStream {
   def typedReplica(spark: SparkSession, replicaDir: String,
       database: String, table: String): DataFrame = {
     val schema = spark.table(s"`$database`.`$table`").schema
-    spark.read.parquet(replicaDir)
+    spark.read.schema(replicaSchema).parquet(replicaDir)
       .where(lower(col("database_name")) === database.toLowerCase &&
         lower(col("table_name")) === table.toLowerCase)
       .select(schema.fields.toSeq.map { f =>

@@ -1,0 +1,183 @@
+package graft
+
+import java.io.File
+import java.nio.file.Files
+import java.sql.Timestamp
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+
+import graft.streaming.MaxwellStream
+import graft.streaming.MaxwellStream.StateChange
+
+/** `MaxwellStream.applyBatchToReplica`: the same-second tie rule, recovery
+  * from every on-disk state a crashed call can leave, and the number of
+  * Spark jobs per batch. */
+class ReplicaSpec extends SparkSpec {
+
+  private def tempReplica(tag: String): String =
+    Files.createTempDirectory(s"graft_$tag").toString + "/replica"
+
+  private def change(pk: String, v: String, ts: Long, op: String = "upsert"): StateChange =
+    StateChange("d", "t", pk, op,
+      if (op == "upsert") Map("id" -> pk, "v" -> v) else Map.empty[String, String],
+      new Timestamp(ts * 1000L))
+
+  private def ds(changes: Seq[StateChange]): Dataset[StateChange] = {
+    import spark.implicits._
+    changes.toDS()
+  }
+
+  /** pk -> v of the replica. */
+  private def values(dir: String): Map[String, String] =
+    spark.read.parquet(dir).collect()
+      .map(r => r.getAs[String]("pk") -> r.getAs[Map[String, String]]("state")("v")).toMap
+
+  /** Every replica row with its bucket, plus the directory names on disk. */
+  private def contents(dir: String): (Set[(Int, String, Map[String, String], Long, Long)], Set[String]) = {
+    val rows = spark.read.parquet(dir).collect().map { r =>
+      (r.getAs[Int]("bucket"), r.getAs[String]("pk"), r.getAs[Map[String, String]]("state").toMap,
+        r.getAs[Timestamp]("ts").getTime, r.getAs[Long]("seq"))
+    }.toSet
+    (rows, new File(dir).listFiles().filter(_.isDirectory).map(_.getName).toSet)
+  }
+
+  test("same-second insert then update without event_id: the replica keeps the update") {
+    import spark.implicits._
+    val dir = tempReplica("tie")
+    val lines = Seq(
+      """{"database":"d","table":"t","type":"insert","ts":1522558000,"data":{"id":"1","v":"a"}}""",
+      """{"database":"d","table":"t","type":"update","ts":1522558000,"data":{"id":"1","v":"b"},"old":{"v":"a"}}"""
+    ).toDF("value")
+    val changes = MaxwellStream.replicaChangelog(MaxwellStream.parse(lines))
+    // both changes carry the same (ts, seq); the state store ends on v=b
+    val emitted = changes.collect()
+    assert(emitted.map(c => (c.ts.getTime, c.seq)).distinct.length == 1)
+    assert(emitted.last.state("v") == "b")
+    MaxwellStream.applyBatchToReplica(changes, dir)
+    assert(values(dir) == Map("1" -> "b"))
+  }
+
+  test("replay tie: a replayed batch and a later same-(ts, seq) change both beat the replica's row") {
+    val dir = tempReplica("replay_tie")
+    val batch = ds(Seq(change("1", "a", 500), change("1", "b", 500), change("2", "x", 500)))
+    MaxwellStream.applyBatchToReplica(batch, dir)
+    assert(values(dir) == Map("1" -> "b", "2" -> "x"))
+    val applied = contents(dir)
+    // the stream replays an uncommitted batch: the replica must not move
+    MaxwellStream.applyBatchToReplica(batch, dir)
+    assert(contents(dir) == applied)
+    // a later batch at the replica row's own (ts, seq) is the newer change
+    MaxwellStream.applyBatchToReplica(ds(Seq(change("1", "c", 500))), dir)
+    assert(values(dir) == Map("1" -> "c", "2" -> "x"))
+  }
+
+  test("swap recovery: every crash state plus a replay equals the uninterrupted run") {
+    val nBuckets = 4
+    val bucketOf: Map[String, Int] = {
+      import spark.implicits._
+      (1 to 60).map(i => change(i.toString, "", 0)).toDS().toDF()
+        .select(org.apache.spark.sql.functions.col("pk"), MaxwellStream.pkBucket(nBuckets))
+        .as[(String, Int)].collect().toMap
+    }
+    val batch0 = ds((1 to 40).map(i => change(i.toString, "v0", 100)))
+    // batch 1 empties one bucket, updates keys of the others and adds keys
+    val emptied = bucketOf("1")
+    val batch1Changes = (1 to 40).map(_.toString).flatMap { pk =>
+      if (bucketOf(pk) == emptied) Some(change(pk, "", 200, "tombstone"))
+      else if (pk.toInt % 3 == 0) Some(change(pk, "v1", 200))
+      else None
+    } ++ (41 to 60).map(_.toString).filter(bucketOf(_) != emptied).map(change(_, "v1", 200))
+    val batch1 = ds(batch1Changes)
+    val live = (0 until nBuckets).map(b => s"bucket=$b")
+
+    val ref = tempReplica("swap_ref")
+    MaxwellStream.applyBatchToReplica(batch0, ref, nBuckets)
+    MaxwellStream.applyBatchToReplica(batch1, ref, nBuckets)
+    val want = contents(ref)
+    assert(!want._2.contains(s"bucket=$emptied"), "the spec must empty a bucket")
+    assert(want._2.size == nBuckets - 1)
+
+    // A crashed call leaves batch 0's replica plus some of: buckets moved
+    // to _old, the merged output staged in _staging, staged buckets swapped in.
+    def crashed(name: String)(state: File => Unit): Unit = {
+      val dir = tempReplica(s"swap_$name")
+      MaxwellStream.applyBatchToReplica(batch0, dir, nBuckets)
+      val root = new File(dir)
+      FileUtils.copyDirectory(new File(ref), new File(root, "_staging"))
+      state(root)
+      MaxwellStream.applyBatchToReplica(batch1, dir, nBuckets) // the replay
+      assert(contents(dir) == want, s"$name: replica differs from the uninterrupted run")
+    }
+    def toOld(root: File, b: String): Unit =
+      FileUtils.moveDirectory(new File(root, b), new File(root, s"_old/$b"))
+    def swapIn(root: File, b: String): Unit =
+      FileUtils.moveDirectory(new File(root, s"_staging/$b"), new File(root, b))
+
+    crashed("moved_not_swapped") { root =>
+      toOld(root, s"bucket=$emptied") // a bucket with no staged output
+      toOld(root, live.find(_ != s"bucket=$emptied").get)
+    }
+    crashed("partly_swapped") { root =>
+      val (swapped, rest) = live.filter(b => new File(root, s"_staging/$b").exists()).splitAt(2)
+      swapped.foreach { b => toOld(root, b); swapIn(root, b) }
+      toOld(root, rest.head)
+    }
+    crashed("all_swapped") { root =>
+      live.foreach { b =>
+        toOld(root, b)
+        if (new File(root, s"_staging/$b").exists()) swapIn(root, b)
+      }
+    }
+    crashed("leftover_staging")(_ => ())
+  }
+
+  test("applyBatchToReplica runs at most 2 Spark jobs per non-empty streamed batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = tempReplica("jobs")
+    val key = "graft.replicaSpec.batch"
+    val jobs = new ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach(id => jobs.merge(id, 1, (a: Integer, b: Integer) => a + b))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val mem = MemoryStream[String]
+    val q = MaxwellStream.replicaChangelog(MaxwellStream.parse(mem.toDF().toDF("value")))
+      .writeStream
+      .foreachBatch { (batch: Dataset[StateChange], id: Long) =>
+        spark.sparkContext.setLocalProperty(key, id.toString)
+        try MaxwellStream.applyBatchToReplica(batch, dir)
+        finally spark.sparkContext.setLocalProperty(key, null)
+      }
+      .start()
+    try {
+      def line(id: Int, ts: Long) =
+        s"""{"database":"d","table":"t","type":"insert","ts":$ts,"data":{"id":"$id","v":"$ts"}}"""
+      mem.addData((1 to 50).map(line(_, 100)): _*) // creates the replica
+      q.processAllAvailable()
+      mem.addData((25 to 75).map(line(_, 200)): _*) // merges into it
+      q.processAllAvailable()
+      // listener events arrive in order: once a marker job is seen, every
+      // job the two batches started has been counted
+      spark.sparkContext.setLocalProperty(key, "marker")
+      try spark.sparkContext.parallelize(1 to 1).count()
+      finally spark.sparkContext.setLocalProperty(key, null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobs.containsKey("marker") && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(jobs.containsKey("marker"), "listener never saw the marker job")
+      assert(values(dir).size == 75)
+      val perBatch = Seq("0", "1").map(id => Option(jobs.get(id)).map(_.intValue).getOrElse(0))
+      info(s"Spark jobs per batch: ${perBatch.mkString(", ")}")
+      assert(perBatch.forall(n => n >= 1 && n <= 2), s"applyBatchToReplica jobs per batch: $perBatch")
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+}
