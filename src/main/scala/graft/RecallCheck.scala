@@ -12,23 +12,28 @@ import org.apache.spark.sql.functions._
   * end-to-end top-3 delta of the forced over-cap path vs the exact one. */
 object RecallCheck {
 
-  /** The Bench knob seam ([[Conf.applyEnv]]): SPARK_GRAFT_CONF=
+  /** The session of every mode: SPARK_GRAFT_CPUS cores, default all. The
+    * Bench knob seam ([[Conf.applyEnv]]): SPARK_GRAFT_CONF=
     * "spark.graft.annProbe=2,..." applies runtime confs before any lane
     * builds — how the probe-depth recall/cost curve is driven (round 15). */
-  private def applyEnvConf(spark: SparkSession): Unit = Conf.applyEnv(spark)
-
-  def main(args: Array[String]): Unit = {
-    val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    if (args.lift(1).contains("containment")) { containmentMode(d); return }
-    if (args.lift(1).contains("ann")) { annMode(d); return }
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+  private def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.io.compression.codec", "zstd")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    applyEnvConf(spark)
+    Conf.applyEnv(spark)
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val d = args.headOption.getOrElse("/root/testdata/sf0.1")
+    if (args.lift(1).contains("containment")) { containmentMode(d); return }
+    if (args.lift(1).contains("ann")) { annMode(d); return }
+    val spark = session()
     import spark.implicits._
 
     val sh = Tables.documents(spark, d)
@@ -79,13 +84,7 @@ object RecallCheck {
     * (3) ann_pq recall@5 at the same SF via its own 8-query lane vs
     * ann_bruteforce. */
   private def annMode(d: String): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    applyEnvConf(spark)
+    val spark = session()
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
 
@@ -164,13 +163,7 @@ object RecallCheck {
     * FORCED over-cap path (cap=0: every block through postings) and the
     * exact all-pairs path (cap=MaxValue). */
   private def containmentMode(d: String): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    applyEnvConf(spark)
+    val spark = session()
 
     val docs = operators.Dedup.docHashedShingles(spark, d)
       .select(col("doc_id"), col("lang"), col("source"), col("hsh"))

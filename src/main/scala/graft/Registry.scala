@@ -116,37 +116,28 @@ object Registry {
     }
   }
 
-  /** Cheap STALENESS fingerprint for a local data dir, mixed into the
+  /** Cheap STALENESS fingerprint for a data dir, mixed into the
     * (session, dir)-keyed memos (Guards stats, Dedup pair/label frames,
     * BPE merge tables): file count + max mtime over the dir, its table
     * dirs and their part files. Without it, regenerating data under the
     * same path in one session (GenScale/GenSkew → re-query, or a
     * production append) silently reuses stale statistics/models — for
     * Guards that can keep a single-sort plan under exactly the skew the
-    * guard exists for. Two directory listings per memo probe: microseconds
-    * against the multi-second jobs these memos save. Non-local / missing
-    * paths (an hdfs:// URI) return a constant — those fall back to the
-    * documented immutable-corpus assumption. */
-  def dirFingerprint(d: String): String =
+    * guard exists for. Lists through the Hadoop FS of the dir's scheme
+    * (file:, hdfs:, s3a:…), like [[operators.Guards.tableBytes]]: one
+    * listing per table dir, against the multi-second jobs these memos
+    * save. A missing or unlistable path returns a constant — it falls
+    * back to the documented immutable-corpus assumption. */
+  def dirFingerprint(s: SparkSession, d: String): String =
     try {
-      val root = new java.io.File(d)
-      if (!root.isDirectory) "nf"
+      val root = new org.apache.hadoop.fs.Path(d)
+      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val rootStatus = fs.getFileStatus(root)
+      if (!rootStatus.isDirectory) "nf"
       else {
-        var n = 0L
-        var maxM = root.lastModified()
-        val top = root.listFiles()
-        if (top != null) top.foreach { f =>
-          n += 1
-          if (f.lastModified() > maxM) maxM = f.lastModified()
-          if (f.isDirectory) {
-            val kids = f.listFiles()
-            if (kids != null) kids.foreach { k =>
-              n += 1
-              if (k.lastModified() > maxM) maxM = k.lastModified()
-            }
-          }
-        }
-        n.toString + ":" + maxM
+        val entries = fs.listStatus(root).flatMap(f =>
+          f +: (if (f.isDirectory) fs.listStatus(f.getPath).toSeq else Nil))
+        entries.length.toString + ":" + (rootStatus +: entries).map(_.getModificationTime).max
       }
     } catch { case NonFatal(_) => "nf" }
 

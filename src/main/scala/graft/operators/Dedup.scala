@@ -422,14 +422,14 @@ object Dedup {
   private[graft] def confirmedPairsShared(s: SparkSession, d: String): DataFrame =
     // dirFingerprint: same-session corpus regeneration recomputes instead
     // of serving pairs of the dead corpus (Guards memo contract)
-    memoGet(pairsMemo, sessionKey(s) + "|" + d + "|" + graft.Registry.dirFingerprint(d))(
+    memoGet(pairsMemo, sessionKey(s) + "|" + d + "|" + graft.Registry.dirFingerprint(s, d))(
       confirmedPairs(s, d).localCheckpoint(true))
 
   /** Star-contraction labels over the shared pair set, computed once per
     * (session, dir) and pinned; returns (labels, parts) where `parts` is
     * the edge-graph-sized partition count the contraction ran with. */
   private[graft] def clusterLabelsShared(s: SparkSession, d: String): (DataFrame, Int) =
-    memoGet(labelsMemo, sessionKey(s) + "|" + d + "|" + graft.Registry.dirFingerprint(d)) {
+    memoGet(labelsMemo, sessionKey(s) + "|" + d + "|" + graft.Registry.dirFingerprint(s, d)) {
       val edges = confirmedPairsShared(s, d).select(col("id1"), col("id2"))
       // Size the contraction loop's parallelism to the DUP GRAPH, not the
       // corpus: the edge set is orders of magnitude smaller than its

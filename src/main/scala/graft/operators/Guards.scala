@@ -143,7 +143,7 @@ object Guards {
     // plan — a stale "under cap" must never keep a single-sort plan under
     // exactly the skew the guard exists for.
     val key = graft.Registry.sessionToken(s) + "|" + d + "|" +
-      graft.Registry.dirFingerprint(d) + "|" + tag
+      graft.Registry.dirFingerprint(s, d) + "|" + tag
     val hit = memo.synchronized(memo.get(key))
     if (hit != null) hit.longValue
     else {

@@ -1093,7 +1093,7 @@ object TextAnalysis {
   private def bpeMerges(s: SparkSession, d: String): Seq[(Int, String, String, Long)] = {
     // dirFingerprint: a same-session corpus regeneration retrains instead
     // of silently reusing the stale merge table (Guards memo contract)
-    val key = sessionKey(s) + "|" + d + "|" + graft.Registry.dirFingerprint(d)
+    val key = sessionKey(s) + "|" + d + "|" + graft.Registry.dirFingerprint(s, d)
     val hit = bpeMemo.get(key)
     if (hit != null) hit
     else {

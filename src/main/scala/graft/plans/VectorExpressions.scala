@@ -1376,12 +1376,23 @@ object VectorExpressions {
   * ([[HyperplaneSig]] is constructor-parameterized by its plane matrix, so
   * it stays a Column-API-only kernel.) This is the
   * `SparkSessionExtensions` integration path of §3's custom-operator
-  * ladder — expressions first, injected properly, no UDFs. */
+  * ladder — expressions first, injected properly, no UDFs.
+  *
+  * It also routes the context's `file:` scheme through
+  * [[graft.io.ForkFreeLocalFs]], so checkpoint, state and replica files
+  * cost no process fork; other schemes are untouched. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
+    // spark.sql.extensions applies this once the context is up, before the
+    // session's first file: lookup; Builder.withExtensions applies it at
+    // once, maybe before any context exists — never create one here
+    // (those builders pass ForkFreeLocalFs.sparkConf instead).
+    val env = org.apache.spark.SparkEnv.get
+    if (env != null && env.executorId == "driver") // SparkContext.DRIVER_IDENTIFIER
+      graft.io.ForkFreeLocalFs.install(org.apache.spark.SparkContext.getOrCreate().hadoopConfiguration)
     def info(name: String, usage: String) =
       new ExpressionInfo(classOf[GraftExtensions].getName, name, usage)
     ext.injectFunction((FunctionIdentifier("graft_dot"),

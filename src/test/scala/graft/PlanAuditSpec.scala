@@ -955,6 +955,21 @@ class PlanAuditSpec extends SparkSpec {
     assert(stat() == 42L && counts == 2)
   }
 
+  test("Registry.dirFingerprint changes under a file:// URI when a file is added") {
+    // it lists through the Hadoop FS of the dir's scheme: a java.io.File
+    // walk saw no directory at "file:///…" and returned a constant, so the
+    // memos keyed on it never went stale off a plain local path
+    val dir = java.nio.file.Files.createTempDirectory("graft_fp_uri").toString
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(dir, "t.parquet"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "t.parquet", "part-0"), "x")
+    val uri = "file://" + dir
+    val before = Registry.dirFingerprint(spark, uri)
+    assert(before == Registry.dirFingerprint(spark, dir), "a URI and its plain path fingerprint alike")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "t.parquet", "part-1"), "y")
+    assert(Registry.dirFingerprint(spark, uri) != before, "an added part file must change the fingerprint")
+    assert(Registry.dirFingerprint(spark, "file://" + dir + "/missing") == "nf")
+  }
+
   test("spark.graft.singleSortCap conf flips a guarded lane to its dist twin without a rebuild") {
     import graft.operators.Cdc
     // default cap: sf0.001 groups are tiny, the plain single-window plan runs

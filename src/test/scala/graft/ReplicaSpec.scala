@@ -135,6 +135,59 @@ class ReplicaSpec extends SparkSpec {
     crashed("leftover_staging")(_ => ())
   }
 
+  test("the streamed replica query restarts from its checkpoint after every batch to the uninterrupted replica") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def event(op: String, id: Int, ts: Long) =
+      s"""{"database":"d","table":"t","type":"$op","ts":$ts,"data":{"id":"$id","v":"$op$ts"}""" +
+        (if (op == "update") s""","old":{"v":"x"}}""" else "}")
+    val batches = Seq(
+      (1 to 40).map(event("insert", _, 100)),
+      (1 to 40 by 3).map(event("update", _, 200)) ++ (2 to 40 by 5).map(event("delete", _, 201)) ++
+        (41 to 50).map(event("insert", _, 202)),
+      (2 to 40 by 10).map(event("insert", _, 300)) ++ (1 to 50 by 4).map(event("update", _, 301)) ++
+        (45 to 50).map(event("delete", _, 302)))
+
+    /** Streams every batch into a fresh replica. After batch `k` the query
+      * is stopped cleanly, or dies inside the sink before or after applying
+      * the batch (so the batch is never committed); it then restarts from
+      * the checkpoint and streams the rest. */
+    def replica(k: Int, how: String): (Set[(Int, String, Map[String, String], Long, Long)], Set[String]) = {
+      val root = Files.createTempDirectory(s"graft_restart_$how").toString
+      val mem = MemoryStream[String]
+      @volatile var dieAt = if (how == "stop") -1L else k.toLong
+      def start() = MaxwellStream.replicaChangelog(MaxwellStream.parse(mem.toDF().toDF("value")))
+        .writeStream
+        .option("checkpointLocation", s"$root/checkpoint")
+        .foreachBatch { (batch: Dataset[StateChange], id: Long) =>
+          if (id == dieAt && how == "die_before_apply") sys.error(s"killed before applying batch $id")
+          MaxwellStream.applyBatchToReplica(batch, s"$root/replica")
+          if (id == dieAt && how == "die_after_apply") sys.error(s"killed after applying batch $id")
+        }
+        .start()
+      var q = start()
+      try batches.zipWithIndex.foreach { case (events, i) =>
+        mem.addData(events: _*)
+        if (i != k || how == "stop") q.processAllAvailable()
+        else {
+          intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+          dieAt = -1L
+        }
+        if (i == k) {
+          q.stop()
+          q = start() // an uncommitted batch k is replayed first
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      contents(s"$root/replica")
+    }
+
+    val want = replica(-1, "stop")
+    assert(want._1.size == 42, "the feed ends with 42 live keys")
+    for (how <- Seq("stop", "die_before_apply", "die_after_apply"); k <- batches.indices)
+      assert(replica(k, how) == want, s"$how at batch $k: replica differs from the uninterrupted run")
+  }
+
   test("applyBatchToReplica runs at most 2 Spark jobs per non-empty streamed batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -54,6 +54,7 @@ object SparkSpec {
       .config("spark.io.compression.codec", "zstd")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(graft.io.ForkFreeLocalFs.sparkConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
