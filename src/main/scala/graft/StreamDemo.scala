@@ -9,9 +9,9 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.MaxwellStream
 
 /** End-to-end streaming CDC drive: renders the `events` table as Maxwell
-  * JSON lines on disk, streams them through parse -> stateful replica ->
-  * archive exactly as a production deployment would (file source stands in
-  * for the queue), and prints one JSON summary line.
+  * JSON lines on disk, streams them through parse -> replica changelog ->
+  * replica and archive exactly as a production deployment would (file
+  * source stands in for the queue), and prints one JSON summary line.
   *
   * Usage: runMain graft.StreamDemo [sfDir]
   */
@@ -88,7 +88,7 @@ object StreamDemo {
     val renderSecs = secsSince(tRender)
     val tDrain = System.nanoTime()
 
-    // 2. Stream: parse -> stateful replica changelog -> parquet replica,
+    // 2. Stream: parse -> replica changelog -> parquet replica,
     //    plus the month-partitioned archive. AvailableNow drains the
     //    backlog then stops — same code path as a continuous run.
     val lines = spark.readStream
@@ -128,7 +128,6 @@ object StreamDemo {
     archiveQ.awaitTermination()
     rejectQ.awaitTermination()
     val drainSecs = secsSince(tDrain)
-    val replicaState = stateStats(replicaQ)
     // Disk-budget discipline (round 14, the sf100 drive): every consumed
     // byte is DELETED as soon as no later stage needs it — the box's free
     // disk, not the corpus, is what bounds the largest drivable SF.
@@ -409,7 +408,7 @@ object StreamDemo {
     val videoParity = videoPairs == videoBatch
     val evPerSec = if (drainSecs > 0) math.round(nArchive / drainSecs) else 0L
     println(
-      s"""{"metric":"stream_demo","archived":$nArchive,"replica_rows":$nReplica,"rejected":$nRejects,"archive_months":$months,"dup_pairs":${streamedPairs.size},"dedup_batch_parity":$dedupParity,"emb_pairs":${embPairs.size},"emb_planted_found":$plantedFound,"emb_planes":$embPlanes,"phash_pairs":${phashPairs.size},"phash_batch_parity":$phashParity,"audio_pairs":${audioPairs.size},"audio_batch_parity":$audioParity,"video_pairs":${videoPairs.size},"video_batch_parity":$videoParity,"ann_hits":${servedHits.size},"ann_index_parity":$annParity,"render_secs":$renderSecs,"drain_secs":$drainSecs,"events_per_sec":$evPerSec,"gates_secs":$gatesSecs,"ann_secs":$annSecs,"replica_state_rows":${replicaState._1},"replica_state_mb":${replicaState._2 / 1048576},"dedup_state_rows":${dedupState._1},"dedup_state_mb":${dedupState._2 / 1048576},"emb_state_rows":${embState._1},"emb_state_mb":${embState._2 / 1048576},"dir":"$work"}""")
+      s"""{"metric":"stream_demo","archived":$nArchive,"replica_rows":$nReplica,"rejected":$nRejects,"archive_months":$months,"dup_pairs":${streamedPairs.size},"dedup_batch_parity":$dedupParity,"emb_pairs":${embPairs.size},"emb_planted_found":$plantedFound,"emb_planes":$embPlanes,"phash_pairs":${phashPairs.size},"phash_batch_parity":$phashParity,"audio_pairs":${audioPairs.size},"audio_batch_parity":$audioParity,"video_pairs":${videoPairs.size},"video_batch_parity":$videoParity,"ann_hits":${servedHits.size},"ann_index_parity":$annParity,"render_secs":$renderSecs,"drain_secs":$drainSecs,"events_per_sec":$evPerSec,"gates_secs":$gatesSecs,"ann_secs":$annSecs,"dedup_state_rows":${dedupState._1},"dedup_state_mb":${dedupState._2 / 1048576},"emb_state_rows":${embState._1},"emb_state_mb":${embState._2 / 1048576},"dir":"$work"}""")
     spark.stop()
   }
 }

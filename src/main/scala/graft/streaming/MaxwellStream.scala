@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import org.apache.spark.util.AccumulatorV2
 
@@ -12,12 +12,12 @@ import org.apache.spark.util.AccumulatorV2
   * replica maintenance, `/root/reference/cdc_periodic_load.sql`) re-expressed
   * as one continuous streaming plan instead of a poll loop.
   *
-  * Scale notes: parsing is a narrow map; the replica state store shuffles
-  * once on the (database, table, pk) key and holds ONLY the latest row per
-  * key in the state store (bounded by live-key cardinality, not stream
-  * length); the archive sink partitions by event month exactly like the
-  * reference's range-partitioned `maxwell_event` table so time-ranged scans
-  * prune.
+  * Scale notes: parsing and the replica changelog are narrow maps, so the
+  * stream keeps no state of its own; the replica is the one stateful copy
+  * of the data, and [[applyBatchToReplica]] folds each batch's changes onto
+  * it, rewriting only the pk buckets the batch touches. The archive sink
+  * partitions by event month exactly like the reference's range-partitioned
+  * `maxwell_event` table so time-ranged scans prune.
   */
 object MaxwellStream {
 
@@ -146,11 +146,12 @@ object MaxwellStream {
       data: Map[String, String],
       old: Map[String, String])
 
-  /** A replica state transition emitted by [[replicaChangelog]].
+  /** A replica change emitted by [[replicaChangelog]], one per event.
     * `seq` is the intra-second event sequence (the Maxwell `event_id` when
     * the source ships one, else 0): Maxwell DML timestamps are whole
-    * seconds, so (ts, seq) — not ts alone — is the replay order, and
-    * latest-wins merges tie-break on it deterministically. */
+    * seconds, so (ts, seq) — not ts alone — is the replay order. `changed`
+    * names the columns an update changed (the keys of Maxwell's `old`);
+    * null means `state` is the whole row. The replica does not store it. */
   final case class StateChange(
       database_name: String,
       table_name: String,
@@ -158,19 +159,14 @@ object MaxwellStream {
       op: String, // upsert | tombstone
       state: Map[String, String],
       ts: java.sql.Timestamp,
-      seq: Long = 0L)
+      seq: Long = 0L,
+      changed: Seq[String] = null)
 
-  /** The `process_events()` replay as a streaming stateful operator:
-    * per (database, table, pk) the store holds the current row; INSERTs
-    * replace it, UPDATEs merge only the changed columns onto it (the
-    * reference applies only the keys present in `old`,
-    * cdc_plpgsql_functions.sql:128-144), DELETEs emit a tombstone and clear
-    * state. Emits the post-image changelog. */
   /** Intra-second replay sequence: Maxwell DML `ts` is whole seconds, so
     * same-second events for one key need a secondary order. Sources driven
     * by [[maxwellify]] ship a numeric `event_id` in `data`; real Maxwell
     * feeds can map their binlog position in the same way. Falls back to 0
-    * (then op name breaks the remaining tie deterministically). */
+    * (then arrival order within the batch settles the remaining tie). */
   private def seqOf(r: CdcRecord): Long =
     if (r.data == null) 0L
     else r.data.get("event_id").flatMap(_.toLongOption).getOrElse(0L)
@@ -196,10 +192,14 @@ object MaxwellStream {
   def replicaChangelog(parsed: DataFrame, pkColumn: String = "id"): Dataset[StateChange] =
     replicaChangelog(parsed, Seq(pkColumn))
 
-  /** Composite-PK form: state is keyed on the TUPLE of all PK column values
-    * taken from `data` (the post-image — a PK-mutating UPDATE therefore
-    * lands on its new key, exactly where the reference's `WHERE pk = data->>
-    * pk` UPDATE would write). Events missing ANY pk column are not
+  /** Composite-PK form: one change per DML event, keyed on the TUPLE of
+    * all PK column values taken from `data` (the post-image — a PK-mutating
+    * UPDATE therefore lands on its new key, exactly where the reference's
+    * `WHERE pk = data->>pk` UPDATE would write). An insert is an upsert of
+    * the whole row, an update an upsert of the columns its `old` names (the
+    * reference applies only those, cdc_plpgsql_functions.sql:128-144) and a
+    * delete a tombstone; [[applyBatchToReplica]] applies them to the
+    * replica row. No state is kept. Events missing ANY pk column are not
     * applicable and flow to [[rejectedEvents]] instead. */
   def replicaChangelog(parsed: DataFrame, pkCols: Seq[String]): Dataset[StateChange] = {
     val spark = parsed.sparkSession
@@ -210,42 +210,15 @@ object MaxwellStream {
       .as[CdcRecord]
       .filter(r => r.data != null && pkCols.forall(r.data.contains) &&
         (r.op == "insert" || r.op == "update" || r.op == "delete"))
-      .groupByKey(r => (r.database_name, r.table_name, encodePk(pkCols.map(r.data))))
-      .flatMapGroupsWithState[Map[String, String], StateChange](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case ((db, table, pk), records, state) =>
-          // Events within a micro-batch are applied in (ts, seq) order —
-          // the reference replays `ORDER BY ts ASC`, and the event
-          // sequence disambiguates same-second events (an update+delete
-          // pair in one second must not replay alphabetically).
-          val ordered = records.toSeq.sortBy(r => (r.ts.getTime, seqOf(r), r.op))
-          val out = scala.collection.mutable.ArrayBuffer.empty[StateChange]
-          var cur = state.getOption.getOrElse(Map.empty[String, String])
-          ordered.foreach { r =>
-            r.op match {
-              case "insert" =>
-                cur = r.data
-                out += StateChange(db, table, pk, "upsert", cur, r.ts, seqOf(r))
-              case "update" =>
-                val changedKeys: Set[String] =
-                  if (r.old != null && r.old.nonEmpty) r.old.keySet else r.data.keySet
-                // No prior state for this key (stream attached after the row
-                // existed — e.g. a bootstrapReplica'd table): recover from
-                // the event's FULL post-image (Maxwell `data` carries the
-                // whole row; `old` is what identifies the changed subset).
-                // With prior state, apply only the changed columns — the
-                // reference's SET-only-changed semantics
-                // (cdc_plpgsql_functions.sql:128-144).
-                cur = if (cur.isEmpty) r.data
-                      else cur ++ r.data.view.filterKeys(changedKeys).toMap
-                out += StateChange(db, table, pk, "upsert", cur, r.ts, seqOf(r))
-              case "delete" =>
-                cur = Map.empty
-                out += StateChange(db, table, pk, "tombstone", Map.empty[String, String], r.ts, seqOf(r))
-            }
-          }
-          if (cur.isEmpty) state.remove() else state.update(cur)
-          out.iterator
+      .map { r =>
+        val pk = encodePk(pkCols.map(r.data))
+        r.op match {
+          case "delete" =>
+            StateChange(r.database_name, r.table_name, pk, "tombstone", Map.empty, r.ts, seqOf(r))
+          case op =>
+            val changed = if (op == "update" && r.old != null && r.old.nonEmpty) r.old.keys.toSeq else null
+            StateChange(r.database_name, r.table_name, pk, "upsert", r.data, r.ts, seqOf(r), changed)
+        }
       }
   }
 
@@ -372,23 +345,41 @@ object MaxwellStream {
   def pkBucket(nBuckets: Int): org.apache.spark.sql.Column =
     pmod(hash(col("database_name"), col("table_name"), col("pk")), lit(nBuckets))
 
-  /** The replica's on-disk row: one [[StateChange]] per live key, under a
-    * `bucket=<`[[pkBucket]]`>/` directory. Reads pass it to parquet, so no
-    * job is spent inferring the schema from the files. */
+  /** The replica's on-disk row: one [[StateChange]] per live key, without
+    * `changed`, under a `bucket=<`[[pkBucket]]`>/` directory. Reads pass it
+    * to parquet, so no job is spent inferring the schema from the files. */
   val replicaSchema: StructType =
-    Encoders.product[StateChange].schema.add("bucket", IntegerType)
+    StructType(Encoders.product[StateChange].schema.filter(_.name != "changed"))
+      .add("bucket", IntegerType)
 
-  /** Latest change per (database_name, table_name, pk): the row with the
-    * greatest (ts, seq, ord). Maxwell DML `ts` is whole seconds and `seq`
-    * is 0 without an `event_id`, so `ord` settles what (ts, seq) leaves
-    * tied: emission order within a batch, and -1 on rows read back from
-    * the replica, so the batch's change beats the replica's copy. */
-  private def latestPerKey(changes: DataFrame): DataFrame =
-    changes
-      .groupBy("database_name", "table_name", "pk")
-      .agg(max_by(struct(changes.columns.toSeq.map(col): _*),
-        struct(col("ts"), col("seq"), col("ord"))).as("latest"))
-      .select("latest.*")
+  /** A row of the replica merge: a [[StateChange]] with its bucket and
+    * `ord`, its arrival order in the batch (-1 for a replica row). */
+  private[streaming] final case class Keyed(database_name: String, table_name: String, pk: String,
+      op: String, state: Map[String, String], ts: java.sql.Timestamp, seq: Long,
+      changed: Seq[String], ord: Long, bucket: Int)
+
+  /** The `process_events()` replay, per (database_name, table_name, pk):
+    * folds the key's rows in (ts, seq, ord) order into at most one replica
+    * row. A whole-row upsert replaces the row; an upsert with `changed` sets
+    * those columns onto the row (cdc_plpgsql_functions.sql:128-144), or
+    * takes its whole `state` when there is no row (Maxwell `data` is the
+    * full post-image); a tombstone clears it. The replica's own row enters
+    * as a whole-row upsert at its (ts, seq) with `ord` -1, so changes older
+    * than the row are overwritten by it and a replayed batch lands on the
+    * row it already produced. */
+  private def foldPerKey(rows: DataFrame): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows.groupBy("database_name", "table_name", "pk").as[(String, String, String), Keyed]
+      .flatMapSortedGroups(col("ts"), col("seq"), col("ord")) { (_, changes) =>
+        changes.foldLeft(Option.empty[Keyed]) { (row, c) =>
+          if (c.op == "tombstone") None
+          else if (row.isEmpty || c.changed == null) Some(c)
+          else Some(c.copy(state = row.get.state ++ c.state.view.filterKeys(c.changed.toSet)))
+        }.iterator
+      }
+      .toDF()
+  }
 
   /** The set of buckets a job's rows fall in: at most `nBuckets` bits per
     * task result, however many rows add to it. */
@@ -409,29 +400,27 @@ object MaxwellStream {
     * ([[replicaSchema]]); each call:
     *
     *  1. recovers from a crashed earlier call (below);
-    *  2. JOB 1 reduces the batch to the latest change per key, adds its
-    *     bucket and localCheckpoints it, gathering the touched buckets in
-    *     an accumulator on the way;
+    *  2. JOB 1 adds each change's bucket and arrival order (`ord`) and
+    *     localCheckpoints the batch, gathering the touched buckets in an
+    *     accumulator on the way; it runs no shuffle;
     *  3. JOB 2 reads ONLY the touched buckets back (partition pruning, with
-    *     the fixed schema), merges them with the batch's latest changes,
-    *     drops tombstones and writes the result, partitioned by bucket, to
+    *     the fixed schema), folds the batch's changes onto each key's row
+    *     ([[foldPerKey]]) and writes the result, partitioned by bucket, to
     *     the hidden `_staging/` directory of the replica;
     *  4. swaps on the driver, bucket by bucket: `bucket=b` moves to
     *     `_old/bucket=b`, then `_staging/bucket=b` moves to `bucket=b`. A
     *     touched bucket with no survivors is thereby emptied. Then `_old`
     *     and `_staging` are deleted.
     *
-    * Latest wins on (ts, seq); an equal (ts, seq) is decided by emission
-    * order within the batch (a key's changes leave the stateful operator
-    * in one partition, in order), and a batch change beats the replica's
-    * row. Replaying a batch is therefore a no-op on the buckets it already
-    * reached.
+    * Changes apply in (ts, seq) order; an equal (ts, seq) is settled by
+    * arrival order within the batch, after the replica's row. Replaying a
+    * batch is therefore a no-op on the buckets it already reached.
     *
     * Crash consistency: a crash can leave a bucket in `_old` whose
     * replacement never moved in. Recovery, at the top of every call, moves
     * each `_old/bucket=b` without a `bucket=b` back, then deletes `_old`
     * and `_staging`; the stream replays the uncommitted batch, and the
-    * merge makes that replay idempotent. Spark's file index skips names
+    * fold makes that replay idempotent. Spark's file index skips names
     * starting with `_`, so readers never see the two hidden directories.
     *
     * Cost per batch is O(touched buckets), not O(replica). Size nBuckets so
@@ -458,22 +447,26 @@ object MaxwellStream {
     val buckets = new BucketSet
     spark.sparkContext.register(buckets)
     val touch = udf { (b: Int) => buckets.add(b); b }.asNondeterministic()
-    val latest = latestPerKey(batch.withColumn("ord", monotonically_increasing_id()))
+    val changes = batch.withColumn("ord", monotonically_increasing_id())
       .withColumn("bucket", touch(pkBucket(nBuckets)))
       .localCheckpoint(true)
     val touched = buckets.value.stream().toArray.toSeq
     if (touched.isEmpty) return
 
-    val merged =
-      if (!fs.exists(root)) latest
-      else latestPerKey(spark.read.schema(replicaSchema).parquet(replicaDir)
+    val rows =
+      if (!fs.exists(root)) changes
+      else spark.read.schema(replicaSchema).parquet(replicaDir)
         .where(col("bucket").isin(touched: _*)) // partition-pruned scan
         .withColumn("ord", lit(-1L))
-        .unionByName(latest))
-    merged
-      .where(col("op") =!= "tombstone")
+        .unionByName(changes, allowMissingColumns = true)
+    // Spark runs a stateless stream's batches adaptively, and AQE would run
+    // the fold's shuffle as a job of its own.
+    val adaptive = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try foldPerKey(rows)
       .select(replicaSchema.fieldNames.toSeq.map(col): _*)
       .write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
+    finally spark.conf.set("spark.sql.adaptive.enabled", adaptive)
 
     fs.mkdirs(old)
     touched.foreach { b =>
@@ -514,9 +507,8 @@ object MaxwellStream {
     * replica from a batch snapshot of the source table before the CDC
     * stream attaches. Every snapshot row becomes an upsert at `ts0`
     * (epoch 0 by default), so ANY subsequently streamed event — which
-    * carries a real timestamp — wins its latest-per-key merge against the
-    * bootstrap copy; re-running the bootstrap is idempotent for the same
-    * snapshot. Schema-side bootstrap is [[applyDdl]] over the dumped DDL
+    * carries a real timestamp — applies after the bootstrap copy;
+    * re-running the bootstrap is idempotent for the same snapshot. Schema-side bootstrap is [[applyDdl]] over the dumped DDL
     * (the script's mysqldump half). Composite keys use the same
     * [[encodePk]] tuple encoding as the streaming lane. */
   def bootstrapReplica(snapshot: DataFrame, database: String, table: String,

@@ -70,11 +70,10 @@ object StreamChecksum {
     import s.implicits._
     changes
       .groupByKey(c => bucketOf(c.pk, buckets))
-      // flatMapGroupsWithState in APPEND mode, not mapGroupsWithState:
-      // this runs downstream of replicaChangelog's own stateful operator,
-      // and Spark only allows chained state ops when ALL are
-      // flatMapGroupsWithState in append mode. Each emitted row is a
-      // final monitoring record of the bucket's digest as of that batch.
+      // flatMapGroupsWithState in APPEND mode: each emitted row is a final
+      // monitoring record of the bucket's digest as of that batch, and the
+      // query may still chain after another append-mode
+      // flatMapGroupsWithState (the only stateful chaining Spark allows).
       .flatMapGroupsWithState[Map[String, Long], BucketDigest](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (bucket, it, state: GroupState[Map[String, Long]]) =>
@@ -90,6 +89,6 @@ object StreamChecksum {
       }
   }
 
-  /** Output mode the chained stateful query requires. */
+  /** Output mode of the digest query. */
   val outputMode: OutputMode = OutputMode.Append()
 }

@@ -839,6 +839,7 @@ class PipelineSpec extends SparkSpec {
     // getOrCreate would silently return the suite session (no extensions);
     // clear the default so a NEW session builds over the SAME SparkContext
     // with the extensions applied, and restore afterwards (never stop()).
+    assert(spark.sparkContext.isLocal) // force the shared context FIRST
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
     try {

@@ -13,9 +13,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.MaxwellStream
 import graft.streaming.MaxwellStream.StateChange
 
-/** `MaxwellStream.applyBatchToReplica`: the same-second tie rule, recovery
-  * from every on-disk state a crashed call can leave, and the number of
-  * Spark jobs per batch. */
+/** `MaxwellStream.applyBatchToReplica`: the same-second tie rule, partial
+  * updates folded onto the replica row, recovery from every on-disk state a
+  * crashed call can leave, and the number of Spark jobs per batch. */
 class ReplicaSpec extends SparkSpec {
 
   private def tempReplica(tag: String): String =
@@ -31,10 +31,13 @@ class ReplicaSpec extends SparkSpec {
     changes.toDS()
   }
 
-  /** pk -> v of the replica. */
-  private def values(dir: String): Map[String, String] =
+  /** pk -> whole row of the replica. */
+  private def rows(dir: String): Map[String, Map[String, String]] =
     spark.read.parquet(dir).collect()
-      .map(r => r.getAs[String]("pk") -> r.getAs[Map[String, String]]("state")("v")).toMap
+      .map(r => r.getAs[String]("pk") -> r.getAs[Map[String, String]]("state").toMap).toMap
+
+  /** pk -> v of the replica. */
+  private def values(dir: String): Map[String, String] = rows(dir).map { case (pk, row) => pk -> row("v") }
 
   /** Every replica row with its bucket, plus the directory names on disk. */
   private def contents(dir: String): (Set[(Int, String, Map[String, String], Long, Long)], Set[String]) = {
@@ -53,7 +56,7 @@ class ReplicaSpec extends SparkSpec {
       """{"database":"d","table":"t","type":"update","ts":1522558000,"data":{"id":"1","v":"b"},"old":{"v":"a"}}"""
     ).toDF("value")
     val changes = MaxwellStream.replicaChangelog(MaxwellStream.parse(lines))
-    // both changes carry the same (ts, seq); the state store ends on v=b
+    // both changes carry the same (ts, seq); arrival order puts v=b last
     val emitted = changes.collect()
     assert(emitted.map(c => (c.ts.getTime, c.seq)).distinct.length == 1)
     assert(emitted.last.state("v") == "b")
@@ -73,6 +76,38 @@ class ReplicaSpec extends SparkSpec {
     // a later batch at the replica row's own (ts, seq) is the newer change
     MaxwellStream.applyBatchToReplica(ds(Seq(change("1", "c", 500))), dir)
     assert(values(dir) == Map("1" -> "c", "2" -> "x"))
+  }
+
+  test("a partial update onto a bootstrapped row keeps the columns it did not change") {
+    import spark.implicits._
+    val dir = tempReplica("partial")
+    MaxwellStream.bootstrapReplica(Seq(("1", "1", "x")).toDF("id", "a", "b"), "d", "t", Seq("id"), dir)
+    val update = Seq(
+      """{"database":"d","table":"t","type":"update","ts":100,"data":{"id":"1","a":"2"},"old":{"a":"1"}}"""
+    ).toDF("value")
+    MaxwellStream.applyBatchToReplica(MaxwellStream.replicaChangelog(MaxwellStream.parse(update)), dir)
+    assert(rows(dir) == Map("1" -> Map("id" -> "1", "a" -> "2", "b" -> "x")))
+  }
+
+  test("a late update older than the replica row leaks into no later image") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = tempReplica("late")
+    val mem = MemoryStream[String]
+    val q = MaxwellStream.replicaChangelog(MaxwellStream.parse(mem.toDF().toDF("value")))
+      .writeStream
+      .foreachBatch { (batch: Dataset[StateChange], _: Long) => MaxwellStream.applyBatchToReplica(batch, dir) }
+      .start()
+    try Seq(
+      """{"database":"d","table":"t","type":"insert","ts":10,"data":{"id":"1","a":"1","b":"x","c":"w"}}""",
+      // arrives after the ts-10 row: the source applied it before that row
+      """{"database":"d","table":"t","type":"update","ts":5,"data":{"id":"1","a":"1","b":"y","c":"w"},"old":{"b":"x"}}""",
+      """{"database":"d","table":"t","type":"update","ts":11,"data":{"id":"1","a":"1","b":"x","c":"z"},"old":{"c":"w"}}"""
+    ).foreach { line =>
+      mem.addData(line)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(rows(dir) == Map("1" -> Map("id" -> "1", "a" -> "1", "b" -> "x", "c" -> "z")))
   }
 
   test("swap recovery: every crash state plus a replay equals the uninterrupted run") {
@@ -228,6 +263,10 @@ class ReplicaSpec extends SparkSpec {
       val perBatch = Seq("0", "1").map(id => Option(jobs.get(id)).map(_.intValue).getOrElse(0))
       info(s"Spark jobs per batch: ${perBatch.mkString(", ")}")
       assert(perBatch.forall(n => n >= 1 && n <= 2), s"applyBatchToReplica jobs per batch: $perBatch")
+      // the changelog is a per-event projection: the query keeps no state
+      assert(q.recentProgress.nonEmpty)
+      assert(q.recentProgress.forall(_.stateOperators.isEmpty),
+        s"stateful operators: ${q.recentProgress.flatMap(_.stateOperators).map(_.operatorName).distinct.mkString(", ")}")
     } finally {
       q.stop()
       spark.sparkContext.removeSparkListener(listener)

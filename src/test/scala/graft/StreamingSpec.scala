@@ -31,45 +31,50 @@ class StreamingSpec extends SparkSpec {
     assert(ins.getAs[Map[String, String]]("data")("id") == "1")
   }
 
-  test("replicaChangelog: insert/partial-update/delete replay via flatMapGroupsWithState") {
+  /** Streams `MaxwellStream.replicaChangelog` into a fresh replica, one
+    * micro-batch per element of `batches`; returns every emitted change and
+    * the replica's pk -> row. */
+  private def streamToReplica(batches: Seq[Seq[String]])
+      : (Seq[MaxwellStream.StateChange], Map[String, Map[String, String]]) = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft_stream_replica").toString + "/replica"
+    val emitted = new java.util.concurrent.ConcurrentLinkedQueue[MaxwellStream.StateChange]()
     val mem = MemoryStream[String]
-    val changes = MaxwellStream.replicaChangelog(MaxwellStream.parse(mem.toDF().toDF("value")))
-    val q = changes.writeStream.format("memory").queryName("changes").outputMode("append").start()
-    try {
-      mem.addData(jsonEvents.take(3): _*) // two inserts + one partial update
-      q.processAllAvailable()
-      mem.addData(jsonEvents.drop(3): _*) // ddl (ignored) + delete of id=2
-      q.processAllAvailable()
-      val rows = spark.table("changes").collect()
-      // 2 inserts + 1 update + 1 tombstone; the DDL row carries no data/pk
-      assert(rows.length == 4)
-      val upd = rows.filter(r => r.getAs[String]("op") == "upsert" && r.getAs[String]("pk") == "1")
-        .maxBy(_.getAs[java.sql.Timestamp]("ts").getTime)
-      val merged = upd.getAs[Map[String, String]]("state")
-      assert(merged("title") == "Nevermind (Remastered)")
-      assert(merged("artist") == "Nirvana") // untouched column survives the partial update
-      val tomb = rows.filter(_.getAs[String]("op") == "tombstone")
-      assert(tomb.length == 1 && tomb.head.getAs[String]("pk") == "2")
-    } finally q.stop()
+    val q = MaxwellStream.replicaChangelog(MaxwellStream.parse(mem.toDF().toDF("value")))
+      .writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[MaxwellStream.StateChange], _: Long) =>
+        batch.collect().foreach(emitted.add)
+        MaxwellStream.applyBatchToReplica(batch, dir)
+      }
+      .start()
+    try batches.foreach { lines => mem.addData(lines: _*); q.processAllAvailable() }
+    finally q.stop()
+    import scala.jdk.CollectionConverters._
+    (emitted.asScala.toSeq, spark.read.parquet(dir).collect()
+      .map(r => r.getAs[String]("pk") -> r.getAs[Map[String, String]]("state").toMap).toMap)
   }
 
-  test("state store carries replica across micro-batches (update before insert batch boundary)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[String]
-    val changes = MaxwellStream.replicaChangelog(MaxwellStream.parse(mem.toDF().toDF("value")))
-    val q = changes.writeStream.format("memory").queryName("changes2").outputMode("append").start()
-    try {
-      mem.addData("""{"database":"d","table":"t","type":"insert","ts":100,"data":{"id":"7","a":"1","b":"x"}}""")
-      q.processAllAvailable()
-      mem.addData("""{"database":"d","table":"t","type":"update","ts":200,"data":{"id":"7","a":"2","b":"x"},"old":{"a":"1"}}""")
-      q.processAllAvailable()
-      val last = spark.table("changes2").collect().maxBy(_.getAs[java.sql.Timestamp]("ts").getTime)
-      val st = last.getAs[Map[String, String]]("state")
-      assert(st("a") == "2" && st("b") == "x")
-    } finally q.stop()
+  test("replica replays insert, partial update and delete") {
+    val (changes, replica) = streamToReplica(Seq(
+      jsonEvents.take(3), // two inserts + one partial update
+      jsonEvents.drop(3))) // ddl (ignored) + delete of id=2
+    // 2 inserts + 1 update + 1 tombstone; the DDL row carries no data/pk
+    assert(changes.length == 4)
+    val merged = replica("1")
+    assert(merged("title") == "Nevermind (Remastered)")
+    assert(merged("artist") == "Nirvana") // untouched column survives the partial update
+    val tomb = changes.filter(_.op == "tombstone")
+    assert(tomb.length == 1 && tomb.head.pk == "2")
+    assert(replica.keySet == Set("1"))
+  }
+
+  test("the replica row carries across micro-batches") {
+    val (_, replica) = streamToReplica(Seq(
+      Seq("""{"database":"d","table":"t","type":"insert","ts":100,"data":{"id":"7","a":"1","b":"x"}}"""),
+      Seq("""{"database":"d","table":"t","type":"update","ts":200,"data":{"id":"7","a":"2","b":"x"},"old":{"a":"1"}}""")))
+    val st = replica("7")
+    assert(st("a") == "2" && st("b") == "x")
   }
 
   test("ddlStatements translates and schema-qualifies streaming DDL events") {
@@ -138,8 +143,8 @@ class StreamingSpec extends SparkSpec {
   test("streaming replica agrees with the batch cdc_snapshot operator") {
     import spark.implicits._
     // Round-trip the real events table through maxwellify -> parse ->
-    // replicaChangelog (flatMapGroupsWithState also runs on batch data) and
-    // reduce to live keys; must equal the batch snapshot's key set.
+    // replicaChangelog (a per-event projection, so it runs on batch data
+    // too) and reduce to live keys; must equal the batch snapshot's key set.
     val parsed = MaxwellStream.parse(MaxwellStream.maxwellify(Tables.events(spark, sfDir)))
     val changes = MaxwellStream.replicaChangelog(parsed)
     val live = changes
@@ -793,8 +798,8 @@ class StreamingSpec extends SparkSpec {
     // idempotent re-run of the same snapshot
     MaxwellStream.bootstrapReplica(snap, "d", "orders", Seq("region", "id"), dir)
     assert(byPk().size == 3)
-    // a streamed partial UPDATE (no prior state-store entry) recovers the
-    // full row from the post-image and beats the bootstrap copy
+    // a streamed partial UPDATE applies its changed column onto the
+    // bootstrap copy and keeps the rest of the row
     val dml = Seq(
       """{"database":"d","table":"orders","type":"update","ts":100,"data":{"region":"eu","id":"1","qty":"6"},"old":{"qty":"5"}}"""
     ).toDF("value")
@@ -803,7 +808,7 @@ class StreamingSpec extends SparkSpec {
     val merged = byPk()
     assert(merged(MaxwellStream.encodePk(Seq("eu", "1")))("qty") == "6")
     assert(merged(MaxwellStream.encodePk(Seq("eu", "1")))("region") == "eu",
-      "post-image recovery must keep the whole row, not just changed columns")
+      "a partial update must keep the whole row, not just changed columns")
     assert(merged(MaxwellStream.encodePk(Seq("us", "1")))("qty") == "9")
     // re-bootstrapping AFTER streaming can never roll the stream back
     MaxwellStream.bootstrapReplica(snap, "d", "orders", Seq("region", "id"), dir)
@@ -863,7 +868,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     // The cdc_merge_sources topology, streaming form: two independent
     // sources (live pipeline + periodic backfill) union BEFORE the replica
-    // state store, so one keyed state covers both lanes.
+    // changelog, so one changelog covers both lanes.
     val live = MemoryStream[String]
     val back = MemoryStream[String]
     val unioned = live.toDF().union(back.toDF()).toDF("value")
@@ -885,8 +890,8 @@ class StreamingSpec extends SparkSpec {
       assert(last7.getAs[Map[String, String]]("state")("v") == "live",
         "newer live update must win over the backfill insert within the batch")
       assert(rows.exists(_.getAs[String]("pk") == "8"), "live-only key must land")
-      // a second batch from the backfill lane only: state carries across
-      // batches and across lanes (the union shares one state store)
+      // a second batch from the backfill lane only: the changelog carries
+      // on across batches and across lanes
       back.addData(
         """{"database":"d","table":"t","type":"update","ts":6000,"data":{"id":8,"v":"backfilled","event_id":11},"old":{"v":"live-only"}}""")
       q.processAllAvailable()
