@@ -21,6 +21,7 @@ object Bench {
       // default; our set-building groupBys have thousands of small groups.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
       .config("spark.ui.enabled", "false")
+      .config(graft.plans.GraftExtensions.sparkConf) // fork-free file:, sized codegen cache
       .getOrCreate()
     // ERROR, not WARN: the driver merges stdout+stderr tails, and any WARN
     // chatter after the final JSON line breaks its parse.

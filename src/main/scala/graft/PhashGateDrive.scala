@@ -42,7 +42,7 @@ object PhashGateDrive {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
       .config("spark.sql.streaming.minBatchesToRetain", "2")
-      .config(graft.io.ForkFreeLocalFs.sparkConf) // RocksDB checkpoints without chmod/readlink forks
+      .config(graft.plans.GraftExtensions.sparkConf) // fork-free RocksDB checkpoints, sized codegen cache
       .config("spark.cleaner.periodicGC.interval", "60s")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -41,7 +41,7 @@ object StreamDemo {
       // delta; retain=2 lets the maintenance thread purge old versions.
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
       .config("spark.sql.streaming.minBatchesToRetain", "2")
-      .config(graft.io.ForkFreeLocalFs.sparkConf) // RocksDB checkpoints without chmod/readlink forks
+      .config(graft.plans.GraftExtensions.sparkConf) // fork-free RocksDB checkpoints, sized codegen cache
       // each micro-batch's stream-static joins leave shuffle files that
       // only the ContextCleaner frees, and it only runs on driver GC —
       // rare under a large heap, so a long AvailableNow drain accumulates

@@ -1380,7 +1380,11 @@ object VectorExpressions {
   *
   * It also routes the context's `file:` scheme through
   * [[graft.io.ForkFreeLocalFs]], so checkpoint, state and replica files
-  * cost no process fork; other schemes are untouched. */
+  * cost no process fork; other schemes are untouched. And it sizes Spark's
+  * codegen cache for the whole operator library
+  * ([[GraftExtensions.installCodegenCache]]), so repeated `graft_run` calls
+  * in one session stop recompiling: Spark's 100-entry default evicts most
+  * of a 10-key mix's classes between calls. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
@@ -1389,10 +1393,13 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     // spark.sql.extensions applies this once the context is up, before the
     // session's first file: lookup; Builder.withExtensions applies it at
     // once, maybe before any context exists — never create one here
-    // (those builders pass ForkFreeLocalFs.sparkConf instead).
+    // (those builders pass GraftExtensions.sparkConf instead).
     val env = org.apache.spark.SparkEnv.get
-    if (env != null && env.executorId == "driver") // SparkContext.DRIVER_IDENTIFIER
-      graft.io.ForkFreeLocalFs.install(org.apache.spark.SparkContext.getOrCreate().hadoopConfiguration)
+    if (env != null && env.executorId == "driver") { // SparkContext.DRIVER_IDENTIFIER
+      val sc = org.apache.spark.SparkContext.getOrCreate()
+      graft.io.ForkFreeLocalFs.install(sc.hadoopConfiguration)
+      GraftExtensions.installCodegenCache(sc)
+    }
     def info(name: String, usage: String) =
       new ExpressionInfo(classOf[GraftExtensions].getName, name, usage)
     ext.injectFunction((FunctionIdentifier("graft_dot"),
@@ -1441,5 +1448,41 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
               s"graft_run('$name'): set ${graft.GraftSql.DataDirConf} or pass a directory argument"))
         graft.GraftSql.run(spark, name, dir).queryExecution.logical
       }))
+  }
+}
+
+object GraftExtensions extends org.apache.spark.internal.Logging {
+  import org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES
+
+  /** Codegen cache entries for the whole operator library: one pass over the
+    * registry compiles 2 581 classes at sf0.01 (`ann_*` left out). */
+  val CodegenCacheEntries = 4000
+
+  /** Session-builder options of graft's own mains: the fork-free `file:`
+    * filesystem and the sized codegen cache, both in the context's conf
+    * from its start. */
+  val sparkConf: Map[String, String] =
+    graft.io.ForkFreeLocalFs.sparkConf + (CODEGEN_CACHE_MAX_ENTRIES.key -> CodegenCacheEntries.toString)
+
+  private val warned = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Puts [[CodegenCacheEntries]] into the context's conf, which the next
+    * session's static SQL conf copies, where the key is unset: a
+    * deployment's own value always wins. `CodeGenerator` sizes its cache
+    * from the first compiling session's conf, once per JVM, so the entry is
+    * only set while no session has been built on `sc` and nothing has been
+    * compiled; otherwise one warning per JVM says how to set it. */
+  private[plans] def installCodegenCache(sc: org.apache.spark.SparkContext): Unit = {
+    val key = CODEGEN_CACHE_MAX_ENTRIES.key
+    if (!sc.getConf.contains(key)) {
+      if (!Bridge.sessionBuilt(sc) &&
+          org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount == 0)
+        Bridge.setContextConf(sc, key, CodegenCacheEntries.toString)
+      else if (warned.compareAndSet(false, true))
+        logWarning(s"graft: $key is unset and cannot be sized any more: a session was built or code " +
+          s"was compiled before graft's extensions were applied, so warm graft_run calls may " +
+          s"recompile. Set $key=$CodegenCacheEntries in spark-defaults or as a session-builder " +
+          s"option (README, \"SQL usage\").")
+    }
   }
 }

@@ -1,0 +1,93 @@
+package graft
+
+import java.lang.management.ManagementFactory
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+/** GraftExtensions' codegen-cache install. `CodeGenerator` sizes its cache
+  * once per JVM, and the shared test context has compiled long before, so
+  * each case runs [[CodegenCacheChild]] in a JVM of its own, one after
+  * another. */
+class CodegenCacheSpec extends AnyFunSuite {
+  private val key = "spark.sql.codegen.cache.maxEntries"
+
+  /** The child's `RESULT` fields and the number of graft's warnings on its output. */
+  private def child(mode: String): (Map[String, String], Int) = {
+    val java = s"${System.getProperty("java.home")}/bin/java"
+    val opens = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.filter(_.startsWith("--add-opens="))
+    val cmd = Seq(java, "-Xmx1g", "-cp", System.getProperty("java.class.path")) ++ opens ++
+      Seq(CodegenCacheChild.getClass.getName.stripSuffix("$"), mode)
+    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    p.getOutputStream.close()
+    val lines = scala.io.Source.fromInputStream(p.getInputStream).getLines().toVector
+    assert(p.waitFor() == 0, lines.takeRight(40).mkString("\n"))
+    val result = lines.filter(_.startsWith("RESULT ")).flatMap(_.stripPrefix("RESULT ").split(" ")).map { kv =>
+      val Array(k, v) = kv.split("=", 2); k -> v
+    }.toMap
+    assert(result.nonEmpty, lines.takeRight(40).mkString("\n"))
+    (result, lines.count(l => l.contains("WARN") && l.contains(s"graft: $key is unset")))
+  }
+
+  test("graft's extensions size the codegen cache, so a second pass compiles nothing") {
+    val (r, warnings) = child("extensions")
+    assert(r("maxEntries") == "4000")
+    assert(r("firstPass").toInt >= 150, r)
+    assert(r("secondPass") == "0", r)
+    assert(warnings == 0)
+  }
+
+  test("an explicit codegen cache size is kept, and a small cache recompiles") {
+    val (r, warnings) = child("explicit")
+    assert(r("maxEntries") == "50")
+    assert(r("secondPass").toInt > 0, r)
+    assert(warnings == 0)
+  }
+
+  test("extensions applied after code was compiled set nothing and warn once") {
+    val (r, warnings) = child("late")
+    assert(r("contextConf") == "unset")
+    assert(r("maxEntries") == "100")
+    assert(r("secondPass").toInt > 0, r)
+    assert(warnings == 1)
+  }
+}
+
+/** One session per mode, then 160 distinct one-class queries run twice;
+  * prints `RESULT` with the session's cache size and each pass's compiles. */
+object CodegenCacheChild {
+  def main(args: Array[String]): Unit = {
+    val key = "spark.sql.codegen.cache.maxEntries"
+    def builder = SparkSession.builder().master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "2")
+    def extended = builder.config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val spark = args(0) match {
+      case "extensions" => extended.getOrCreate()
+      case "explicit" => extended.config(key, "50").getOrCreate()
+      case "late" =>
+        builder.getOrCreate().range(3).selectExpr("id + 1").collect()
+        // spark.sql.extensions is read from the context's conf, so a later
+        // builder applies graft's extensions itself; twice: still one warning
+        (1 to 2).map { _ =>
+          SparkSession.clearActiveSession()
+          SparkSession.clearDefaultSession()
+          builder.withExtensions(new graft.plans.GraftExtensions).getOrCreate()
+        }.last
+    }
+    def pass(): Long = {
+      val c0 = compiles
+      (1 to 160).foreach(i => spark.range(0, 4, 1, 1).selectExpr(s"id * $i + 1 AS x").collect())
+      compiles - c0
+    }
+    val first = pass()
+    val second = pass()
+    val contextConf = spark.sparkContext.getConf.getOption(key).getOrElse("unset")
+    println(s"RESULT maxEntries=${spark.conf.get(key)} contextConf=$contextConf firstPass=$first secondPass=$second")
+    spark.stop()
+  }
+}
