@@ -1,34 +1,13 @@
 package graft
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // zstd shuffle/spill compression (round 13): measured cost-NEUTRAL at
-      // sf10 (59.8 vs 60.2 s over the 4 heaviest shuffle lanes) and >=1.5x
-      // smaller shuffle files -- the difference between emb_knn_graph at sf100
-      // FAILING on local-disk exhaustion under lz4 (>51 GB) and passing at
-      // 265.6 s (~43 GB low-water) on one box. At 100 TB the shuffle-byte
-      // shrink is pure cross-rack win.
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // collect_set aggregations fall back to sort-based after 128 keys by
-      // default; our set-building groupBys have thousands of small groups.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.ui.enabled", "false")
-      .config(graft.plans.GraftExtensions.sparkConf) // fork-free file:, sized codegen cache
-      .getOrCreate()
     // ERROR, not WARN: the driver merges stdout+stderr tails, and any WARN
-    // chatter after the final JSON line breaks its parse.
-    spark.sparkContext.setLogLevel("ERROR")
-    // Optional runtime confs for profiling knob sweeps, e.g.
+    // chatter after the final JSON line breaks its parse. SPARK_GRAFT_CONF
+    // sets runtime confs for profiling knob sweeps, e.g.
     // SPARK_GRAFT_CONF="spark.graft.knnProbe=2,spark.graft.postingCap=128"
-    Conf.applyEnv(spark)
+    val spark = Session.local(logLevel = "ERROR")
     // Optional comma-separated filter for profiling individual queries.
     // Sorted by name: Map iteration order would shuffle which queries pay
     // cold-codegen costs between runs, adding run-to-run noise.

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -49,7 +48,7 @@ import org.apache.spark.sql.streaming.Trigger
 object EmbGateDrive {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/data/sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = Session.cpus.toString
     val order = sys.env.getOrElse("SPARK_GRAFT_FEED_ORDER", "local")
     val killAtBatch = sys.env.getOrElse("SPARK_GRAFT_KILL_AT_BATCH", "0").toInt
     // non-empty -> drive the RETENTION-BOUNDED lane (candidatesBounded)
@@ -61,24 +60,7 @@ object EmbGateDrive {
     // verdict-#2 concern: the per-(table, bucket) cap must bound a hot
     // group INSIDE the retention window.
     val bounded = sys.env.getOrElse("SPARK_GRAFT_BOUNDED_RETENTION", "")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the StreamDemo production state shape: RocksDB off-heap state +
-      // changelog checkpoints + short retain window + periodic GC
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-      .config(graft.plans.GraftExtensions.sparkConf) // fork-free RocksDB checkpoints, sized codegen cache
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Conf.applyEnv(spark)
+    val spark = Session.local(extra = Session.StreamingState)
 
     val work = sys.env.getOrElse("SPARK_GRAFT_WORK_DIR",
       Files.createTempDirectory("graft_emb_gate").toString)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic corpus scale-up generator: tiles an existing sf directory
@@ -75,16 +75,7 @@ object GenScale {
     val src    = sys.env.getOrElse("SPARK_GRAFT_SRC_DIR", "/root/testdata/sf0.1")
     val out    = sys.env.getOrElse("SPARK_GRAFT_OUT_DIR", "data/sf1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_COPIES", "10").toInt
-    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     import spark.implicits._
 
     val copiesDf = broadcast(spark.range(copies.toLong).toDF("copy"))

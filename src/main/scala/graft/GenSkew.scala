@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deterministic HOT-KEY variant generator for the skew evidence runs
@@ -24,18 +23,9 @@ object GenSkew {
   def main(args: Array[String]): Unit = {
     val src  = sys.env.getOrElse("SPARK_GRAFT_SRC_DIR", "/root/repo/data/sf1")
     val out  = sys.env.getOrElse("SPARK_GRAFT_OUT_DIR", "/root/repo/data/sf1hot")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     // hot-key mass in percent (default 10): pmod(event_id, 100) < pct
     val pct  = sys.env.getOrElse("SPARK_GRAFT_HOT_PCT", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val ev = Tables.events(spark, src)
     val hot = ev.agg(min(col("user_id"))).head.getLong(0)
     ev.withColumn("user_id",

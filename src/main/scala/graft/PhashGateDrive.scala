@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -30,24 +29,9 @@ import org.apache.spark.sql.streaming.Trigger
 object PhashGateDrive {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/data/sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = Session.cpus.toString
     val lane = sys.env.getOrElse("SPARK_GRAFT_GATE_LANE", "image")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-      .config(graft.plans.GraftExtensions.sparkConf) // fork-free RocksDB checkpoints, sized codegen cache
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Conf.applyEnv(spark)
+    val spark = Session.local(extra = Session.StreamingState)
 
     val work = Files.createTempDirectory("graft_phash_gate").toString
     val gateParts = sys.env.getOrElse("SPARK_GRAFT_GATE_PARTITIONS", cpus)

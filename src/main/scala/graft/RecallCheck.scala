@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off: brute-force jaccard>=0.8 pairs at a given SF vs the MinHash-LSH
@@ -12,28 +11,11 @@ import org.apache.spark.sql.functions._
   * end-to-end top-3 delta of the forced over-cap path vs the exact one. */
 object RecallCheck {
 
-  /** The session of every mode: SPARK_GRAFT_CPUS cores, default all. The
-    * Bench knob seam ([[Conf.applyEnv]]): SPARK_GRAFT_CONF=
-    * "spark.graft.annProbe=2,..." applies runtime confs before any lane
-    * builds — how the probe-depth recall/cost curve is driven (round 15). */
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Conf.applyEnv(spark)
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     if (args.lift(1).contains("containment")) { containmentMode(d); return }
     if (args.lift(1).contains("ann")) { annMode(d); return }
-    val spark = session()
+    val spark = Session.local()
     import spark.implicits._
 
     val sh = Tables.documents(spark, d)
@@ -82,9 +64,11 @@ object RecallCheck {
     * emb_recall_report methodology, so no blocking assumption is needed
     * on tiled corpora whose copies share identical embeddings);
     * (3) ann_pq recall@5 at the same SF via its own 8-query lane vs
-    * ann_bruteforce. */
+    * ann_bruteforce. SPARK_GRAFT_CONF="spark.graft.annProbe=2,..."
+    * applies runtime confs before any lane builds — how the probe-depth
+    * recall/cost curve is driven (round 15). */
   private def annMode(d: String): Unit = {
-    val spark = session()
+    val spark = Session.local()
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
 
@@ -163,7 +147,7 @@ object RecallCheck {
     * FORCED over-cap path (cap=0: every block through postings) and the
     * exact all-pairs path (cap=MaxValue). */
   private def containmentMode(d: String): Unit = {
-    val spark = session()
+    val spark = Session.local()
 
     val docs = operators.Dedup.docHashedShingles(spark, d)
       .select(col("doc_id"), col("lang"), col("source"), col("hsh"))

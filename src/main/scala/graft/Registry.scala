@@ -66,8 +66,8 @@ object Registry {
     * just recomputes if consumed again), so steady-state storage is one
     * frame per (session, tag). Holding the DataFrame strongly adds no pin
     * beyond Spark's own CacheManager (which holds every cached plan until
-    * unpersist/clearCache anyway); the map is bounded like the Guards
-    * memo — on overflow it clears, which only drops unpersist HANDLES
+    * unpersist/clearCache anyway); the map is bounded — on overflow it
+    * clears, which only drops unpersist HANDLES
     * (stale entries belong to sessions whose stop already dropped their
     * cache). */
   private val CacheTagCap = 64
@@ -116,9 +116,9 @@ object Registry {
     }
   }
 
-  /** Cheap STALENESS fingerprint for a data dir, mixed into the
-    * (session, dir)-keyed memos (Guards stats, Dedup pair/label frames,
-    * BPE merge tables): file count + max mtime over the dir, its table
+  /** Cheap STALENESS fingerprint for a data dir, mixed into every
+    * [[Memo]] key (Guards stats, Dedup pair/label frames, BPE merge
+    * tables, table schemas): file count + max mtime over the dir, its table
     * dirs and their part files. Without it, regenerating data under the
     * same path in one session (GenScale/GenSkew → re-query, or a
     * production append) silently reuses stale statistics/models — for
@@ -126,14 +126,15 @@ object Registry {
     * guard exists for. Lists through the Hadoop FS of the dir's scheme
     * (file:, hdfs:, s3a:…), like [[operators.Guards.tableBytes]]: one
     * listing per table dir, against the multi-second jobs these memos
-    * save. A missing or unlistable path returns a constant — it falls
+    * save. A plain file (a single-file table) fingerprints as its length
+    * and mtime. A missing or unlistable path returns a constant — it falls
     * back to the documented immutable-corpus assumption. */
   def dirFingerprint(s: SparkSession, d: String): String =
     try {
       val root = new org.apache.hadoop.fs.Path(d)
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       val rootStatus = fs.getFileStatus(root)
-      if (!rootStatus.isDirectory) "nf"
+      if (!rootStatus.isDirectory) rootStatus.getLen + ":" + rootStatus.getModificationTime
       else {
         val entries = fs.listStatus(root).flatMap(f =>
           f +: (if (f.isDirectory) fs.listStatus(f.getPath).toSeq else Nil))

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -18,41 +17,10 @@ import graft.streaming.MaxwellStream
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // RocksDB state store (round 13): the default HDFS-backed store
-      // keeps every state row ON HEAP — at sf100 the LSH gate's band-key
-      // state (~5M docs x 16 bands x ~470 B ~= 37 GB) killed the 64 g JVM
-      // with SparkExitCode.OOM(52). RocksDB holds state off-heap/on-disk,
-      // which is the production deployment shape for state >> heap; the
-      // tiny-state specs keep the default provider.
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // CHANGELOG checkpointing + short retain window (round 13, found at
-      // sf100): the OSS default snapshots the FULL RocksDB state per
-      // micro-batch version and retains 100 versions — the text gate's
-      // ~10 GB state x 8 AvailableNow batches filled the disk before the
-      // drain finished. Changelog checkpoints upload only the batch's
-      // delta; retain=2 lets the maintenance thread purge old versions.
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-      .config(graft.plans.GraftExtensions.sparkConf) // fork-free RocksDB checkpoints, sized codegen cache
-      // each micro-batch's stream-static joins leave shuffle files that
-      // only the ContextCleaner frees, and it only runs on driver GC —
-      // rare under a large heap, so a long AvailableNow drain accumulates
-      // every batch's shuffle on disk. Force a periodic GC sweep.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the measurement-harness knob seam (round 16): lets a drive set
-    // spark.graft.* lane knobs (e.g. embGateBucketCap) without a rebuild
-    Conf.applyEnv(spark)
+    val cpus = Session.cpus.toString
+    // SPARK_GRAFT_CONF (round 16) lets a drive set spark.graft.* lane knobs
+    // (e.g. embGateBucketCap) without a rebuild
+    val spark = Session.local(extra = Session.StreamingState)
     import spark.implicits._
 
     val work = Files.createTempDirectory("graft_stream_demo").toString

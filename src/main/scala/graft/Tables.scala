@@ -9,8 +9,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * swap to a partitioned / bucketed layout is one-line.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Inferred table schemas, one per (session, table path): inference runs
+    * a Spark job, so a warm build over unchanged tables runs none.
+    * `nanosAsLong` is the tag because it changes the inferred `ts` type
+    * (see [[events]]). */
+  private val schemas = new Memo[org.apache.spark.sql.types.StructType](256)
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = schemas.get(spark, path, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"))(
+      spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** `props.k` extraction, single-sourced for every events-props lane
     * (cdc_parse, cdc_snapshot_composite, q_interval_overlap,

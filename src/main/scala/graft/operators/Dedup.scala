@@ -384,52 +384,24 @@ object Dedup {
     * edges/labels-sized — orders of magnitude below the corpus — so
     * pinning is safe at any SF.
     *
-    * Lifetime contract: keyed by `appId@identity + dir` (a STRING — never
-    * the SparkSession object, which would pin a stopped session for the
-    * JVM lifetime), bounded at [[DedupMemoCap]] distinct (session, dir)
-    * pairs with clear-on-overflow (correctness never depends on a hit —
-    * a miss just recomputes), and the discovery job runs OUTSIDE any map
-    * lock so an unrelated key hashing to the same bin is never blocked
-    * behind a full LSH pass. Sized for the bench process (a handful of
-    * corpora per session); an embedded long-lived server cycling through
-    * many data dirs rolls over at the cap instead of accumulating pinned
-    * checkpoint blocks forever. */
-  /** Guaranteed-unique session-stable string key ([[graft.Registry
-    * .sessionToken]]'s per-session UUID) — never the session OBJECT, so
-    * the memo can't pin a stopped session, and never appId+identityHash,
-    * which collides across newSession() siblings / GC'd sessions. */
-  private def sessionKey(s: SparkSession): String = graft.Registry.sessionToken(s)
-
+    * Both memos are [[graft.Memo]]s of [[DedupMemoCap]] (session, dir)
+    * entries: sized for the bench process (a handful of corpora per
+    * session); an embedded long-lived server cycling through many data dirs
+    * rolls over at the cap instead of accumulating pinned checkpoint blocks
+    * forever. */
   private val DedupMemoCap = 64
-  private val pairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val labelsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, Int)]()
-
-  private def memoGet[V <: AnyRef](memo: java.util.concurrent.ConcurrentHashMap[String, V],
-      key: String)(compute: => V): V = {
-    val hit = memo.get(key)
-    if (hit != null) hit
-    else {
-      val v = compute // outside the map: no bin lock held across the job
-      if (memo.size >= DedupMemoCap) memo.clear()
-      val prev = memo.putIfAbsent(key, v)
-      if (prev != null) prev else v
-    }
-  }
+  private val pairsMemo = new graft.Memo[DataFrame](DedupMemoCap)
+  private val labelsMemo = new graft.Memo[(DataFrame, Int)](DedupMemoCap)
 
   /** [[confirmedPairs]], computed once per (session, dir) and pinned. */
   private[graft] def confirmedPairsShared(s: SparkSession, d: String): DataFrame =
-    // dirFingerprint: same-session corpus regeneration recomputes instead
-    // of serving pairs of the dead corpus (Guards memo contract)
-    memoGet(pairsMemo, sessionKey(s) + "|" + d + "|" + graft.Registry.dirFingerprint(s, d))(
-      confirmedPairs(s, d).localCheckpoint(true))
+    pairsMemo.get(s, d)(confirmedPairs(s, d).localCheckpoint(true))
 
   /** Star-contraction labels over the shared pair set, computed once per
     * (session, dir) and pinned; returns (labels, parts) where `parts` is
     * the edge-graph-sized partition count the contraction ran with. */
   private[graft] def clusterLabelsShared(s: SparkSession, d: String): (DataFrame, Int) =
-    memoGet(labelsMemo, sessionKey(s) + "|" + d + "|" + graft.Registry.dirFingerprint(s, d)) {
+    labelsMemo.get(s, d) {
       val edges = confirmedPairsShared(s, d).select(col("id1"), col("id2"))
       // Size the contraction loop's parallelism to the DUP GRAPH, not the
       // corpus: the edge set is orders of magnitude smaller than its

@@ -86,20 +86,8 @@ object Guards {
   def annServeCap(s: SparkSession): Long =
     graft.Conf.long(s, graft.Conf.AnnServeCapConf, AnnServeCap)
 
-  private val MemoCap = 256
-  // LRU, not clear-on-overflow (round 14): the old clear-all wiped every
-  // memoized stat on the 257th key, so a long-lived multi-dir session
-  // thrashed recounts of its HOT keys. accessOrder=true makes get() a
-  // touch; removeEldestEntry evicts only the coldest entry. All access
-  // synchronized — guard lookups are rare (one per lane per dir), the
-  // compute job itself still runs OUTSIDE the lock.
-  private val memo = new java.util.LinkedHashMap[String, java.lang.Long](64, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[String, java.lang.Long]): Boolean =
-      size() > MemoCap
-  }
+  private val memo = new graft.Memo[java.lang.Long](256)
 
-  /** Memoized guard statistic: computes (once per session/dir/tag) the
-    * caller's max-group-size aggregate. */
   /** Broadcast-hint `df` iff the TABLE it slices is provably small ON
     * DISK — the cliff-free replacement for the r17 forced hints on
     * SF-scaling dims (see [[graft.Conf.DimHintCapConf]]). The guard
@@ -137,22 +125,11 @@ object Guards {
       } catch { case _: Exception => Long.MaxValue }
     }
 
-  def maxGroupRows(s: SparkSession, d: String, tag: String)(compute: => Long): Long = {
-    // dirFingerprint (round 13): data regenerated/appended under the same
-    // path invalidates the stat, so the guard re-counts and can FLIP the
-    // plan — a stale "under cap" must never keep a single-sort plan under
-    // exactly the skew the guard exists for.
-    val key = graft.Registry.sessionToken(s) + "|" + d + "|" +
-      graft.Registry.dirFingerprint(s, d) + "|" + tag
-    val hit = memo.synchronized(memo.get(key))
-    if (hit != null) hit.longValue
-    else {
-      val v = compute // outside the lock: no monitor held across the job
-      memo.synchronized {
-        val prev = memo.get(key)
-        if (prev != null) prev.longValue
-        else { memo.put(key, java.lang.Long.valueOf(v)); v }
-      }
-    }
-  }
+  /** Memoized guard statistic: computes (once per session/dir/tag) the
+    * caller's max-group-size aggregate. Data regenerated or appended under
+    * the same path re-counts ([[graft.Memo]]'s fingerprint) and can FLIP
+    * the plan — a stale "under cap" must never keep a single-sort plan
+    * under exactly the skew the guard exists for. */
+  def maxGroupRows(s: SparkSession, d: String, tag: String)(compute: => Long): Long =
+    memo.get(s, d, tag)(java.lang.Long.valueOf(compute)).longValue
 }

@@ -1073,36 +1073,12 @@ object TextAnalysis {
     * rounds and later callers read 12 cached rows. A real deployment
     * persists the table instead (the ann_index pattern).
     *
-    * Keyed by `sessionUUID + dir` — a STRING, never the SparkSession
-    * itself, so the memo cannot pin a stopped session (and its merge
-    * tables) for the JVM lifetime. Bounded at [[BpeMemoCap]] entries
-    * (clear-on-overflow: correctness never depends on a hit), and the
-    * training job runs OUTSIDE any map lock — `computeIfAbsent` would
-    * hold its bin lock across the whole 12-round Spark job, blocking any
-    * unrelated key that hashes to the same bin. */
-  /** Guaranteed-unique session-stable string key ([[graft.Registry
-    * .sessionToken]]'s per-session UUID) — never the session OBJECT, so
-    * the memo can't pin a stopped session, and never appId+identityHash,
-    * which collides across newSession() siblings / GC'd sessions. */
-  private def sessionKey(s: SparkSession): String = graft.Registry.sessionToken(s)
-
+    * A [[graft.Memo]] of [[BpeMemoCap]] (session, dir) entries. */
   private val BpeMemoCap = 64
-  private val bpeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, String, String, Long)]]()
+  private val bpeMemo = new graft.Memo[Seq[(Int, String, String, Long)]](BpeMemoCap)
 
-  private def bpeMerges(s: SparkSession, d: String): Seq[(Int, String, String, Long)] = {
-    // dirFingerprint: a same-session corpus regeneration retrains instead
-    // of silently reusing the stale merge table (Guards memo contract)
-    val key = sessionKey(s) + "|" + d + "|" + graft.Registry.dirFingerprint(s, d)
-    val hit = bpeMemo.get(key)
-    if (hit != null) hit
-    else {
-      val trained = trainBpe(s, d) // outside the map: no bin lock held
-      if (bpeMemo.size >= BpeMemoCap) bpeMemo.clear()
-      val prev = bpeMemo.putIfAbsent(key, trained)
-      if (prev != null) prev else trained
-    }
-  }
+  private def bpeMerges(s: SparkSession, d: String): Seq[(Int, String, String, Long)] =
+    bpeMemo.get(s, d)(trainBpe(s, d))
 
   private def trainBpe(s: SparkSession, d: String): Seq[(Int, String, String, Long)] = {
       import s.implicits._

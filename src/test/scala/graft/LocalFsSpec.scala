@@ -148,7 +148,7 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("graft sessions resolve file: to graft's classes; a deployment's own choice wins") {
-    // SparkSpec's session passes ForkFreeLocalFs.sparkConf: even the cached
+    // graft.Session passes GraftExtensions.sparkConf: even the cached
     // instance, made at the first file: lookup, is graft's
     assert(FileSystem.get(root, spark.sparkContext.hadoopConfiguration).isInstanceOf[ForkFreeLocalFileSystem])
     val hc = spark.sparkContext.hadoopConfiguration

@@ -1036,4 +1036,21 @@ class PlanAuditSpec extends SparkSpec {
       assert(flipped.exceptAll(want).count() == 0 && want.exceptAll(flipped).count() == 0)
     } finally spark.conf.unset(graft.Conf.FunnelSortCapConf)
   }
+
+  test("sessions are built only in graft.Session; operators declare no memo maps of their own") {
+    import scala.jdk.CollectionConverters._
+    def sources(dir: String): Seq[(String, String)] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => p.toString -> java.nio.file.Files.readString(p)).toList
+      finally walk.close()
+    }
+    val builders = sources("src/main").collect { case (p, src) if src.contains("SparkSession.builder") => p }
+    assert(builders == Seq("src/main/scala/graft/Session.scala"),
+      s"SparkSession.builder outside graft.Session: $builders")
+    val maps = sources("src/main/scala/graft/operators").collect {
+      case (p, src) if "ConcurrentHashMap|LinkedHashMap".r.findFirstIn(src).nonEmpty => p
+    }
+    assert(maps.isEmpty, s"hand-rolled memo maps (use graft.Memo): $maps")
+  }
 }

@@ -43,20 +43,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(graft.io.ForkFreeLocalFs.sparkConf)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The production conf list ([[graft.Session]]) on 4 cores, with a
+    * throwaway warehouse for the specs' `saveAsTable`s. */
+  lazy val session: SparkSession = Session.local(4, extra = Map("spark.sql.warehouse.dir" ->
+    java.nio.file.Files.createTempDirectory("graft_wh").toString))
 }
