@@ -9,16 +9,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * swap to a partitioned / bucketed layout is one-line.
   */
 object Tables {
-  /** Inferred table schemas, one per (session, table path): inference runs
-    * a Spark job, so a warm build over unchanged tables runs none.
-    * `nanosAsLong` is the tag because it changes the inferred `ts` type
-    * (see [[events]]). */
-  private val schemas = new Memo[org.apache.spark.sql.types.StructType](256)
+  /** Inferred table schemas, one per (table path, schema confs), shared by
+    * every session: inference runs a Spark job, so a build over unchanged
+    * tables runs none, in a new session too. */
+  private val schemas = new Memo[org.apache.spark.sql.types.StructType](256, perSession = false)
+
+  /** The session confs the parquet schema converter reads, plus schema
+    * merging; `nanosAsLong` changes the inferred `ts` type (see [[events]]). */
+  private val schemaConfs = {
+    import org.apache.spark.sql.internal.SQLConf._
+    Seq(LEGACY_PARQUET_NANOS_AS_LONG, PARQUET_BINARY_AS_STRING, PARQUET_INT96_AS_TIMESTAMP,
+      PARQUET_INFER_TIMESTAMP_NTZ_ENABLED, PARQUET_FIELD_ID_READ_ENABLED, PARQUET_SCHEMA_MERGING_ENABLED,
+      PARQUET_IGNORE_VARIANT_ANNOTATION, PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION,
+      VARIANT_ALLOW_READING_SHREDDED, CASE_SENSITIVE).map(_.key)
+  }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val schema = schemas.get(spark, path, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"))(
-      spark.read.parquet(path).schema)
+    val tag = schemaConfs.map(k => spark.conf.getOption(k).getOrElse("")).mkString(",")
+    val schema = schemas.get(spark, path, tag)(spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 

@@ -390,8 +390,8 @@ object Dedup {
     * rolls over at the cap instead of accumulating pinned checkpoint blocks
     * forever. */
   private val DedupMemoCap = 64
-  private val pairsMemo = new graft.Memo[DataFrame](DedupMemoCap)
-  private val labelsMemo = new graft.Memo[(DataFrame, Int)](DedupMemoCap)
+  private val pairsMemo = new graft.Memo[DataFrame](DedupMemoCap, perSession = true)
+  private val labelsMemo = new graft.Memo[(DataFrame, Int)](DedupMemoCap, perSession = true)
 
   /** [[confirmedPairs]], computed once per (session, dir) and pinned. */
   private[graft] def confirmedPairsShared(s: SparkSession, d: String): DataFrame =

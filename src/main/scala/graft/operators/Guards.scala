@@ -6,14 +6,11 @@ import org.apache.spark.sql.SparkSession
   * single-sort window plan and its two-phase distributed twin at runtime.
   *
   * The guard statistic (max rows in one window partition) costs one
-  * hash-agg count job, so it is memoized per (session, dir, tag) — the
-  * bpeMemo/pairsMemo lifetime contract: keyed by [[graft.Registry
-  * .sessionToken]]'s per-session UUID plus the data dir (STRINGS, never
-  * the session object), bounded as a synchronized access-order LRU
-  * (removeEldestEntry evicts only the coldest key; a miss just
-  * recomputes), and the count job runs OUTSIDE any map lock — two racing
-  * first probes may both compute, which is benign (same value, last put
-  * loses). */
+  * hash-agg count job, so it is memoized per (dir, tag) in a [[graft.Memo]]
+  * shared by every session: the statistic is a count over the files, and
+  * reads no session conf. The memo is a bounded LRU, and the count job
+  * runs OUTSIDE its lock — two racing first probes may both compute, which
+  * is benign (same value, first put wins). */
 object Guards {
 
   /** Per-partition row bound above which a windowed single-sort lane
@@ -86,7 +83,7 @@ object Guards {
   def annServeCap(s: SparkSession): Long =
     graft.Conf.long(s, graft.Conf.AnnServeCapConf, AnnServeCap)
 
-  private val memo = new graft.Memo[java.lang.Long](256)
+  private val memo = new graft.Memo[java.lang.Long](256, perSession = false)
 
   /** Broadcast-hint `df` iff the TABLE it slices is provably small ON
     * DISK — the cliff-free replacement for the r17 forced hints on
@@ -125,7 +122,7 @@ object Guards {
       } catch { case _: Exception => Long.MaxValue }
     }
 
-  /** Memoized guard statistic: computes (once per session/dir/tag) the
+  /** Memoized guard statistic: computes (once per dir/tag) the
     * caller's max-group-size aggregate. Data regenerated or appended under
     * the same path re-counts ([[graft.Memo]]'s fingerprint) and can FLIP
     * the plan — a stale "under cap" must never keep a single-sort plan

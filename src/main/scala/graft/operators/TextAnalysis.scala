@@ -1067,15 +1067,15 @@ object TextAnalysis {
     * Rows-only by design (SQL cannot express the iteration); the spec
     * replays an INDEPENDENT single-node scala implementation of the
     * textbook algorithm and asserts the merge tables identical. */
-  /** Session-scoped memo of the learned merge table per (session, corpus)
-    * — the shared-LSH-memo precedent (Dedup.scala): training is
-    * deterministic, so the first caller (train or apply) pays the 12
-    * rounds and later callers read 12 cached rows. A real deployment
-    * persists the table instead (the ann_index pattern).
+  /** Memo of the learned merge table per corpus, shared by every session
+    * (it is plain data): training is deterministic, so the first caller
+    * (train or apply) pays the 12 rounds and later callers read 12 cached
+    * rows. A real deployment persists the table instead (the ann_index
+    * pattern).
     *
-    * A [[graft.Memo]] of [[BpeMemoCap]] (session, dir) entries. */
+    * A [[graft.Memo]] of [[BpeMemoCap]] dir entries. */
   private val BpeMemoCap = 64
-  private val bpeMemo = new graft.Memo[Seq[(Int, String, String, Long)]](BpeMemoCap)
+  private val bpeMemo = new graft.Memo[Seq[(Int, String, String, Long)]](BpeMemoCap, perSession = false)
 
   private def bpeMerges(s: SparkSession, d: String): Seq[(Int, String, String, Long)] =
     bpeMemo.get(s, d)(trainBpe(s, d))

@@ -1384,7 +1384,9 @@ object VectorExpressions {
   * codegen cache for the whole operator library
   * ([[GraftExtensions.installCodegenCache]]), so repeated `graft_run` calls
   * in one session stop recompiling: Spark's 100-entry default evicts most
-  * of a 10-key mix's classes between calls. */
+  * of a 10-key mix's classes between calls. It also lets later sessions
+  * share the executor's class loader ([[GraftExtensions.installSharedClassLoader]]),
+  * so a query compiled in one session is a cache hit in every other. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
@@ -1399,6 +1401,7 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       val sc = org.apache.spark.SparkContext.getOrCreate()
       graft.io.ForkFreeLocalFs.install(sc.hadoopConfiguration)
       GraftExtensions.installCodegenCache(sc)
+      GraftExtensions.installSharedClassLoader(sc)
     }
     def info(name: String, usage: String) =
       new ExpressionInfo(classOf[GraftExtensions].getName, name, usage)
@@ -1452,6 +1455,7 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
 }
 
 object GraftExtensions extends org.apache.spark.internal.Logging {
+  import org.apache.spark.sql.internal.SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED
   import org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES
 
   /** Codegen cache entries for the whole operator library: one pass over the
@@ -1459,10 +1463,11 @@ object GraftExtensions extends org.apache.spark.internal.Logging {
   val CodegenCacheEntries = 4000
 
   /** Session-builder options of graft's own mains: the fork-free `file:`
-    * filesystem and the sized codegen cache, both in the context's conf
-    * from its start. */
+    * filesystem, the sized codegen cache and the shared class loader, all
+    * in the context's conf from its start. */
   val sparkConf: Map[String, String] =
-    graft.io.ForkFreeLocalFs.sparkConf + (CODEGEN_CACHE_MAX_ENTRIES.key -> CodegenCacheEntries.toString)
+    graft.io.ForkFreeLocalFs.sparkConf + (CODEGEN_CACHE_MAX_ENTRIES.key -> CodegenCacheEntries.toString) +
+      (ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false")
 
   private val warned = new java.util.concurrent.atomic.AtomicBoolean(false)
 
@@ -1485,4 +1490,15 @@ object GraftExtensions extends org.apache.spark.internal.Logging {
           s"option (README, \"SQL usage\").")
     }
   }
+
+  /** Turns Spark's per-session artifact isolation off in the context's conf
+    * where the key is unset, so sessions built afterwards (`newSession()`, a
+    * stream's `cloneSession()`, a server's per-connection sessions) run their
+    * tasks under the executor's default class loader. The JVM-wide codegen
+    * cache is keyed by that loader: with isolation on, each session's tasks
+    * get a loader of their own and recompile every class. graft adds no
+    * per-session artifacts; a deployment that does keeps its own `true`. */
+  private[plans] def installSharedClassLoader(sc: org.apache.spark.SparkContext): Unit =
+    if (!sc.getConf.contains(ARTIFACTS_SESSION_ISOLATION_ENABLED.key))
+      Bridge.setContextConf(sc, ARTIFACTS_SESSION_ISOLATION_ENABLED.key, "false")
 }

@@ -367,10 +367,11 @@ object MaxwellStream {
     * as a whole-row upsert at its (ts, seq) with `ord` -1, so changes older
     * than the row are overwritten by it and a replayed batch lands on the
     * row it already produced. */
-  private def foldPerKey(rows: DataFrame): DataFrame = {
+  private def foldPerKey(rows: DataFrame, partitions: Int): DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._
-    rows.groupBy("database_name", "table_name", "pk").as[(String, String, String), Keyed]
+    rows.repartition(partitions, col("database_name"), col("table_name"), col("pk"))
+      .groupBy("database_name", "table_name", "pk").as[(String, String, String), Keyed]
       .flatMapSortedGroups(col("ts"), col("seq"), col("ord")) { (_, changes) =>
         changes.foldLeft(Option.empty[Keyed]) { (row, c) =>
           if (c.op == "tombstone") None
@@ -380,6 +381,15 @@ object MaxwellStream {
       }
       .toDF()
   }
+
+  /** The fold's partition count: the largest divisor of `nBuckets` not
+    * above the session's shuffle partitions. The fold hashes on
+    * (database_name, table_name, pk) with the same Murmur3 as [[pkBucket]],
+    * and with a divisor `n` the partition is the bucket mod `n`: each task
+    * writes whole buckets, so a rewritten bucket is one file at any core
+    * count. */
+  private def foldPartitions(nBuckets: Int, shufflePartitions: Int): Int =
+    (math.min(nBuckets, shufflePartitions) to 1 by -1).find(nBuckets % _ == 0).get
 
   /** The set of buckets a job's rows fall in: at most `nBuckets` bits per
     * task result, however many rows add to it. */
@@ -405,8 +415,9 @@ object MaxwellStream {
     *     accumulator on the way; it runs no shuffle;
     *  3. JOB 2 reads ONLY the touched buckets back (partition pruning, with
     *     the fixed schema), folds the batch's changes onto each key's row
-    *     ([[foldPerKey]]) and writes the result, partitioned by bucket, to
-    *     the hidden `_staging/` directory of the replica;
+    *     ([[foldPerKey]], whole buckets per task: [[foldPartitions]]) and
+    *     writes the result, one file per bucket, to the hidden `_staging/`
+    *     directory of the replica;
     *  4. swaps on the driver, bucket by bucket: `bucket=b` moves to
     *     `_old/bucket=b`, then `_staging/bucket=b` moves to `bucket=b`. A
     *     touched bucket with no survivors is thereby emptied. Then `_old`
@@ -463,7 +474,7 @@ object MaxwellStream {
     // the fold's shuffle as a job of its own.
     val adaptive = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try foldPerKey(rows)
+    try foldPerKey(rows, foldPartitions(nBuckets, spark.conf.get("spark.sql.shuffle.partitions").toInt))
       .select(replicaSchema.fieldNames.toSeq.map(col): _*)
       .write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
     finally spark.conf.set("spark.sql.adaptive.enabled", adaptive)

@@ -41,7 +41,7 @@ class CdcSpec extends SparkSpec {
 
   test("incrementalLoad prunes archive month partitions and equals the full recompute") {
     import org.apache.spark.sql.expressions.Window
-    val dir = java.nio.file.Files.createTempDirectory("graft_archive_inc").toString + "/archive"
+    val dir = TempDirs("archive_inc") + "/archive"
     // the testdata spans one month; shift even event_ids back 60 days so the
     // archive has an old month the watermark can prune
     val e = Tables.events(spark, sfDir).withColumn("ts",

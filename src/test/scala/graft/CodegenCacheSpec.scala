@@ -8,10 +8,10 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftExtensions' codegen-cache install. `CodeGenerator` sizes its cache
-  * once per JVM, and the shared test context has compiled long before, so
-  * each case runs [[CodegenCacheChild]] in a JVM of its own, one after
-  * another. */
+/** GraftExtensions' codegen-cache and shared-class-loader installs.
+  * `CodeGenerator` sizes its cache once per JVM, and the shared test context
+  * has compiled long before, so each case runs [[CodegenCacheChild]] in a
+  * JVM of its own, one after another. */
 class CodegenCacheSpec extends AnyFunSuite {
   private val key = "spark.sql.codegen.cache.maxEntries"
 
@@ -32,8 +32,11 @@ class CodegenCacheSpec extends AnyFunSuite {
     (result, lines.count(l => l.contains("WARN") && l.contains(s"graft: $key is unset")))
   }
 
+  /** The plain `spark.sql.extensions` build, shared by the cases that read it. */
+  private lazy val extensions = child("extensions")
+
   test("graft's extensions size the codegen cache, so a second pass compiles nothing") {
-    val (r, warnings) = child("extensions")
+    val (r, warnings) = extensions
     assert(r("maxEntries") == "4000")
     assert(r("firstPass").toInt >= 150, r)
     assert(r("secondPass") == "0", r)
@@ -47,6 +50,23 @@ class CodegenCacheSpec extends AnyFunSuite {
     assert(warnings == 0)
   }
 
+  test("under graft's extensions a query compiled in one session compiles nothing in newSession()") {
+    val (r, _) = extensions
+    assert(r("firstPass").toInt >= 150, r)
+    assert(r("newSession") == "0", r)
+  }
+
+  test("an explicit artifact isolation is kept, and a new session recompiles") {
+    val (r, _) = child("isolated")
+    assert(r("isolation") == "true", r)
+    assert(r("secondPass") == "0", r)
+    assert(r("newSession").toInt > 0, r)
+  }
+
+  test("a plain spark.sql.extensions build turns artifact isolation off in the context conf") {
+    assert(extensions._1("isolation") == "false", extensions._1)
+  }
+
   test("extensions applied after code was compiled set nothing and warn once") {
     val (r, warnings) = child("late")
     assert(r("contextConf") == "unset")
@@ -56,11 +76,14 @@ class CodegenCacheSpec extends AnyFunSuite {
   }
 }
 
-/** One session per mode, then 160 distinct one-class queries run twice;
-  * prints `RESULT` with the session's cache size and each pass's compiles. */
+/** One session per mode, then 160 distinct one-class queries run twice, and
+  * for "extensions" and "isolated" once more in a `newSession()`; prints
+  * `RESULT` with the session's cache size, the context's artifact isolation
+  * and each pass's compiles. */
 object CodegenCacheChild {
   def main(args: Array[String]): Unit = {
     val key = "spark.sql.codegen.cache.maxEntries"
+    val isolation = "spark.sql.artifact.isolation.enabled"
     def builder = SparkSession.builder().master("local[2]")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.shuffle.partitions", "2")
@@ -69,6 +92,7 @@ object CodegenCacheChild {
     val spark = args(0) match {
       case "extensions" => extended.getOrCreate()
       case "explicit" => extended.config(key, "50").getOrCreate()
+      case "isolated" => extended.config(isolation, "true").getOrCreate()
       case "late" =>
         builder.getOrCreate().range(3).selectExpr("id + 1").collect()
         // spark.sql.extensions is read from the context's conf, so a later
@@ -79,15 +103,17 @@ object CodegenCacheChild {
           builder.withExtensions(new graft.plans.GraftExtensions).getOrCreate()
         }.last
     }
-    def pass(): Long = {
+    def pass(s: SparkSession): Long = {
       val c0 = compiles
-      (1 to 160).foreach(i => spark.range(0, 4, 1, 1).selectExpr(s"id * $i + 1 AS x").collect())
+      (1 to 160).foreach(i => s.range(0, 4, 1, 1).selectExpr(s"id * $i + 1 AS x").collect())
       compiles - c0
     }
-    val first = pass()
-    val second = pass()
-    val contextConf = spark.sparkContext.getConf.getOption(key).getOrElse("unset")
-    println(s"RESULT maxEntries=${spark.conf.get(key)} contextConf=$contextConf firstPass=$first secondPass=$second")
+    val first = pass(spark)
+    val second = pass(spark)
+    val newSession = if (Set("extensions", "isolated")(args(0))) pass(spark.newSession()).toString else "-"
+    def context(k: String) = spark.sparkContext.getConf.getOption(k).getOrElse("unset")
+    println(s"RESULT maxEntries=${spark.conf.get(key)} contextConf=${context(key)} " +
+      s"isolation=${context(isolation)} firstPass=$first secondPass=$second newSession=$newSession")
     spark.stop()
   }
 }

@@ -117,7 +117,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("ShardWriter: data and manifest agree; layout prunes; greedy packing holds") {
-    val out = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val out = TempDirs("shards")
     val manifest = graft.sources.ShardWriter.write(spark, sfDir, out)
     val viaQuery = Curation.pipelineShardManifest.fn(spark, sfDir)
     // the published manifest IS the oracle-gated query's result

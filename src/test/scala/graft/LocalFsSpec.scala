@@ -37,7 +37,7 @@ class LocalFsSpec extends SparkSpec {
 
   private def perm(octal: String) = new FsPermission(Integer.parseInt(octal, 8).toShort)
 
-  private def tempDir(): String = Files.createTempDirectory("graft_localfs").toString
+  private def tempDir(): String = TempDirs("localfs")
 
   private def mode(p: String): Int =
     Files.getAttribute(Paths.get(p), "unix:mode").asInstanceOf[Int] & 0xfff

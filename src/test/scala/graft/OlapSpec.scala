@@ -131,7 +131,7 @@ class OlapSpec extends SparkSpec {
     // raw (r-1)/(c-1) would be 0/0 there. A corpus can hold BOTH a >cap
     // group (delegating the guarded lane to the twin) and a 1-row group,
     // so the twin must get this edge right on its own.
-    val dir = java.nio.file.Files.createTempDirectory("graft_cume1").toString
+    val dir = TempDirs("cume1")
     Seq(
       (1L, "F", "1-URGENT", 10.0),
       (2L, "F", "2-HIGH", 5.0), (3L, "F", "2-HIGH", 7.0), (4L, "F", "2-HIGH", 7.0),

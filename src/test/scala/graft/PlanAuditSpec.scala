@@ -856,7 +856,7 @@ class PlanAuditSpec extends SparkSpec {
     // scheme through the session's Hadoop conf, so a file:-scheme'd dir
     // (the smallest non-local-walkable case this sandbox can exercise)
     // must now return the table's true on-disk bytes.
-    val tmp = java.nio.file.Files.createTempDirectory("guards_fs").toString
+    val tmp = TempDirs("guards_fs")
     spark.range(1000).toDF("id").coalesce(1)
       .write.parquet(s"$tmp/t.parquet")
     def diskBytes(dir: String): Long = {
@@ -941,7 +941,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("Guards memo re-counts when data under the dir changes (staleness fingerprint)") {
     import graft.operators.Guards
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp").toString
+    val dir = TempDirs("fp")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "t.parquet"), "x")
     var counts = 0
     def stat(): Long = Guards.maxGroupRows(spark, dir, "fp_spec") { counts += 1; 42L }
@@ -959,7 +959,7 @@ class PlanAuditSpec extends SparkSpec {
     // it lists through the Hadoop FS of the dir's scheme: a java.io.File
     // walk saw no directory at "file:///…" and returned a constant, so the
     // memos keyed on it never went stale off a plain local path
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp_uri").toString
+    val dir = TempDirs("fp_uri")
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(dir, "t.parquet"))
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "t.parquet", "part-0"), "x")
     val uri = "file://" + dir

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 import java.sql.Timestamp
 import java.util.concurrent.ConcurrentHashMap
 
@@ -19,7 +18,7 @@ import graft.streaming.MaxwellStream.StateChange
 class ReplicaSpec extends SparkSpec {
 
   private def tempReplica(tag: String): String =
-    Files.createTempDirectory(s"graft_$tag").toString + "/replica"
+    TempDirs(tag) + "/replica"
 
   private def change(pk: String, v: String, ts: Long, op: String = "upsert"): StateChange =
     StateChange("d", "t", pk, op,
@@ -188,7 +187,7 @@ class ReplicaSpec extends SparkSpec {
       * the batch (so the batch is never committed); it then restarts from
       * the checkpoint and streams the rest. */
     def replica(k: Int, how: String): (Set[(Int, String, Map[String, String], Long, Long)], Set[String]) = {
-      val root = Files.createTempDirectory(s"graft_restart_$how").toString
+      val root = TempDirs(s"restart_$how")
       val mem = MemoryStream[String]
       @volatile var dieAt = if (how == "stop") -1L else k.toLong
       def start() = MaxwellStream.replicaChangelog(MaxwellStream.parse(mem.toDF().toDF("value")))
@@ -271,5 +270,35 @@ class ReplicaSpec extends SparkSpec {
       q.stop()
       spark.sparkContext.removeSparkListener(listener)
     }
+  }
+
+  test("every rewritten bucket is one parquet file, also when the shuffle partitions do not divide the buckets") {
+    val s3 = spark.newSession()
+    s3.conf.set("spark.sql.shuffle.partitions", "3")
+    import s3.implicits._
+    implicit val sqlCtx = s3.sqlContext
+    val dir = tempReplica("one_file")
+    def filesPerBucket(): Map[String, Int] =
+      new File(dir).listFiles().filter(_.getName.startsWith("bucket="))
+        .map(b => b.getName -> b.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    MaxwellStream.bootstrapReplica((1 to 2000).map(i => (i, s"v$i")).toDF("id", "v"), "d", "t", Seq("id"), dir)
+    val booted = filesPerBucket()
+    assert(booted.size == 16 && booted.values.forall(_ == 1), s"parquet files per bucket after the bootstrap: $booted")
+
+    val mem = MemoryStream[String]
+    val q = MaxwellStream.replicaChangelog(MaxwellStream.parse(mem.toDF().toDF("value")))
+      .writeStream
+      .foreachBatch((batch: Dataset[StateChange], _: Long) => MaxwellStream.applyBatchToReplica(batch, dir))
+      .start()
+    try {
+      mem.addData((1 to 2000 by 4).map(i =>
+        s"""{"database":"d","table":"t","type":"update","ts":100,"data":{"id":"$i","v":"w$i"},"old":{"v":"v$i"}}"""): _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    val streamed = filesPerBucket()
+    assert(streamed.size == 16 && streamed.values.forall(_ == 1),
+      s"parquet files per bucket after a streamed batch: $streamed")
+    val v = values(dir)
+    assert(v.size == 2000 && v("1") == "w1" && v("2") == "v2")
   }
 }

@@ -46,5 +46,5 @@ object SparkSpec {
   /** The production conf list ([[graft.Session]]) on 4 cores, with a
     * throwaway warehouse for the specs' `saveAsTable`s. */
   lazy val session: SparkSession = Session.local(4, extra = Map("spark.sql.warehouse.dir" ->
-    java.nio.file.Files.createTempDirectory("graft_wh").toString))
+    TempDirs("wh")))
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -38,7 +37,7 @@ class StreamingSpec extends SparkSpec {
       : (Seq[MaxwellStream.StateChange], Map[String, Map[String, String]]) = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_stream_replica").toString + "/replica"
+    val dir = TempDirs("stream_replica") + "/replica"
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[MaxwellStream.StateChange]()
     val mem = MemoryStream[String]
     val q = MaxwellStream.replicaChangelog(MaxwellStream.parse(mem.toDF().toDF("value")))
@@ -477,7 +476,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("compactArchive collapses small files to one per partition, preserving data") {
-    val dir = Files.createTempDirectory("graft_compact").toString + "/archive"
+    val dir = TempDirs("compact") + "/archive"
     // simulate many micro-batch files: 10 files per month partition
     val months = MaxwellStream.parse(
       MaxwellStream.maxwellify(Tables.events(spark, sfDir)))
@@ -496,7 +495,7 @@ class StreamingSpec extends SparkSpec {
   test("recoverArchive restores every interrupted-compaction crash state") {
     import org.apache.hadoop.fs.Path
     val fs = new Path("/tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = Files.createTempDirectory("graft_recover").toString
+    val base = TempDirs("recover")
     val dir = s"$base/archive"
     Tables.region(spark, sfDir).write.parquet(dir)
     val rows = spark.read.parquet(dir).count()
@@ -548,7 +547,7 @@ class StreamingSpec extends SparkSpec {
 
   test("bucketed replica merge rewrites only touched buckets") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_buckets").toString + "/replica"
+    val dir = TempDirs("buckets") + "/replica"
     val nBuckets = 16
     def change(pk: String, ts: Long) = MaxwellStream.StateChange(
       "d", "t", pk, "upsert", Map("id" -> pk), new java.sql.Timestamp(ts))
@@ -576,7 +575,7 @@ class StreamingSpec extends SparkSpec {
 
   test("typedReplica casts the string-map state to the catalog schema (get_type role)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_typed").toString + "/replica"
+    val dir = TempDirs("typed") + "/replica"
     val ddl = Seq(
       """{"database":"typedb","table":"album","type":"database-create","ts":1522558000000}""",
       """{"database":"typedb","table":"album","type":"table-create","ts":1522558001000,"sql":"CREATE TABLE `album` (id INT, title LONGTEXT, price DOUBLE, created DATETIME)"}"""
@@ -610,7 +609,7 @@ class StreamingSpec extends SparkSpec {
   test("archive sink partitions by event month; replica merge is idempotent") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_archive").toString
+    val dir = TempDirs("archive")
     val mem = MemoryStream[String]
     val q = MaxwellStream
       .startArchive(MaxwellStream.parse(mem.toDF().toDF("value")), s"$dir/data", s"$dir/ckpt")
@@ -787,7 +786,7 @@ class StreamingSpec extends SparkSpec {
 
   test("bootstrapReplica: snapshot seeds the replica; streamed events always win") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_boot").toString + "/replica"
+    val dir = TempDirs("boot") + "/replica"
     val snap = Seq(("eu", "1", "5"), ("us", "1", "9"), ("eu", "2", "7"))
       .toDF("region", "id", "qty")
     def byPk() = spark.read.parquet(dir).collect()
@@ -822,8 +821,8 @@ class StreamingSpec extends SparkSpec {
     val cust = Tables.customer(spark, sfDir)
       .select(col("c_custkey").cast("string").as("c_custkey"),
         col("c_name"), col("c_mktsegment"))
-    val oneDir = Files.createTempDirectory("graft_bf1").toString + "/replica"
-    val chkDir = Files.createTempDirectory("graft_bf2").toString + "/replica"
+    val oneDir = TempDirs("bf1") + "/replica"
+    val chkDir = TempDirs("bf2") + "/replica"
     MaxwellStream.bootstrapReplica(cust, "d", "customer", Seq("c_custkey"), oneDir)
     val chunks = graft.operators.ScalePatterns.cdcBackfillPlan.fn(spark, sfDir)
       .collect().map(r => (r.getAs[Long]("key_lo"), r.getAs[Long]("key_hi"),
@@ -848,7 +847,7 @@ class StreamingSpec extends SparkSpec {
 
   test("composite-PK replica end-to-end: bucketed merge holds one row per tuple") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_cpk").toString + "/replica"
+    val dir = TempDirs("cpk") + "/replica"
     val dml = Seq(
       """{"database":"d","table":"orders","type":"insert","ts":100,"data":{"region":"eu","id":"1","qty":"5"}}""",
       """{"database":"d","table":"orders","type":"insert","ts":101,"data":{"region":"us","id":"1","qty":"9"}}""",
@@ -906,8 +905,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StreamAnomaly
-    val ckpt = java.nio.file.Files.createTempDirectory("anom_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("anom_out").toString
+    val ckpt = TempDirs("anom_ckpt")
+    val outDir = TempDirs("anom_out")
     val rows = Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"), col("value"))
       .as[(Long, Long, Long, Double)].collect()
@@ -1054,8 +1053,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StreamScd2
-    val ckpt = java.nio.file.Files.createTempDirectory("scd2_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("scd2_out").toString
+    val ckpt = TempDirs("scd2_ckpt")
+    val outDir = TempDirs("scd2_out")
     val rows = Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"), col("value"))
@@ -1639,7 +1638,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     // the production shape: shingle ONCE at archive-write time; the
     // per-batch confirm side is then a parquet column scan
-    val dir = java.nio.file.Files.createTempDirectory("shingled_archive").toString
+    val dir = TempDirs("shingled_archive")
     Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .map { case (id, t) => (id, graft.operators.Dedup.hashedShingleSet(t).toSeq) }
@@ -1726,7 +1725,7 @@ class StreamingSpec extends SparkSpec {
       (400L + k, v)
     }
     val all = base ++ dups
-    val dir = java.nio.file.Files.createTempDirectory("normed_store").toString
+    val dir = TempDirs("normed_store")
     val dot = graft.plans.VectorExpressions.floatDot _
     all.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
       .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
@@ -1980,8 +1979,8 @@ class StreamingSpec extends SparkSpec {
     val v1 = Array.fill(64)((rnd.nextDouble() - 0.5).toFloat)
     val v2 = v1.clone(); v2(1) += 0.01f
     val filler = Array.fill(64)((rnd.nextDouble() - 0.5).toFloat)
-    val ckpt = java.nio.file.Files.createTempDirectory("embd_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("embd_out").toString
+    val ckpt = TempDirs("embd_ckpt")
+    val outDir = TempDirs("embd_out")
     val corpus = Seq(1L -> v1.toSeq, 2L -> v2.toSeq, 9L -> filler.toSeq)
       .toDF("vec_id", "embedding")
     val mem = MemoryStream[(Long, Seq[Float])]
@@ -2016,8 +2015,8 @@ class StreamingSpec extends SparkSpec {
     (2 to 5).foreach(k =>
       assert(graft.streaming.StreamEmbDedup.tableBuckets(near(k)).sameElements(b0),
         s"seed precondition: vector $k left the shared bucket"))
-    val ckpt = java.nio.file.Files.createTempDirectory("embcap_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("embcap_out").toString
+    val ckpt = TempDirs("embcap_ckpt")
+    val outDir = TempDirs("embcap_out")
     spark.conf.set(graft.Conf.EmbGateBucketCapConf, "2")
     try {
       val mem = MemoryStream[(Long, Seq[Float])]
@@ -2060,8 +2059,8 @@ class StreamingSpec extends SparkSpec {
     (2 to 5).foreach(k =>
       assert(graft.streaming.StreamEmbDedup.tableBuckets(near(k)).sameElements(b0),
         s"seed precondition: vector $k left the shared bucket"))
-    val ckpt = java.nio.file.Files.createTempDirectory("embflip_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("embflip_out").toString
+    val ckpt = TempDirs("embflip_ckpt")
+    val outDir = TempDirs("embflip_out")
     val mem = MemoryStream[(Long, Seq[Float])]
     def start() = graft.streaming.StreamEmbDedup.candidates(
         mem.toDF().toDF("vec_id", "embedding")).toDF()
@@ -2349,8 +2348,8 @@ class StreamingSpec extends SparkSpec {
     (2 to 5).foreach(k =>
       assert(graft.streaming.StreamEmbDedup.tableBuckets(near(k)).sameElements(b0),
         s"seed precondition: vector $k left the shared bucket"))
-    val ckpt = java.nio.file.Files.createTempDirectory("embcapb_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("embcapb_out").toString
+    val ckpt = TempDirs("embcapb_ckpt")
+    val outDir = TempDirs("embcapb_out")
     spark.conf.set(graft.Conf.EmbGateBucketCapConf, "2")
     try {
       val mem = MemoryStream[(Long, Seq[Float], java.sql.Timestamp)]
@@ -2460,8 +2459,8 @@ class StreamingSpec extends SparkSpec {
       "cat watches from a warm windowsill nearby in silence today"
     val filler = "unrelated municipal drainage committee minutes concerning " +
       "culvert inspection rotas and the allocation of gravel stockpiles"
-    val ckpt = java.nio.file.Files.createTempDirectory("dedup_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("dedup_out").toString
+    val ckpt = TempDirs("dedup_ckpt")
+    val outDir = TempDirs("dedup_out")
     val corpus = Seq(1L -> dup, 2L -> dup, 3L -> filler).toDF("doc_id", "text")
     val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
     def start() = graft.streaming.StreamDedup.distinctPairsBounded(
@@ -2536,8 +2535,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
-    val ckpt = java.nio.file.Files.createTempDirectory("wf_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("wf_out").toString
+    val ckpt = TempDirs("wf_ckpt")
+    val outDir = TempDirs("wf_out")
     val mem = MemoryStream[(Long, Long, String, java.sql.Timestamp)]
     def start() = graft.streaming.StreamWindowFunnel.levels(
         mem.toDF().toDF("user_id", "event_id", "event_type", "ts")
@@ -2561,8 +2560,8 @@ class StreamingSpec extends SparkSpec {
   test("StreamBudgetGate counters survive a checkpointed stop/restart") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("bg_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("bg_out").toString
+    val ckpt = TempDirs("bg_ckpt")
+    val outDir = TempDirs("bg_out")
     val mem = MemoryStream[(Long, String, String, String)]
     def start() = graft.streaming.StreamBudgetGate.decisions(
         mem.toDF().toDF("doc_id", "text", "lang", "source"), budget = 10L)
@@ -2841,7 +2840,7 @@ class StreamingSpec extends SparkSpec {
 
   test("strict apply mode: one pk-less event aborts the batch, replica untouched") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_strict").toString + "/replica"
+    val dir = TempDirs("strict") + "/replica"
     val good = Seq(
       """{"database":"d","table":"t","type":"insert","ts":1522558000,"data":{"id":"1","v":"a"}}""",
       """{"database":"d","table":"t","type":"insert","ts":1522558010,"data":{"id":"2","v":"b"}}"""
@@ -2873,7 +2872,7 @@ class StreamingSpec extends SparkSpec {
   test("archive quarantine: out-of-range timestamps land in event_month=outliers") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_quarantine").toString
+    val dir = TempDirs("quarantine")
     val mem = MemoryStream[String]
     val q = MaxwellStream
       .startArchive(MaxwellStream.parse(mem.toDF().toDF("value")), s"$dir/data", s"$dir/ckpt")
@@ -2904,7 +2903,7 @@ class StreamingSpec extends SparkSpec {
 
   test("mid-stream schema evolution e2e: ALTER ADD COLUMN types late rows, NULLs early ones") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_evolve").toString + "/replica"
+    val dir = TempDirs("evolve") + "/replica"
     val ddl1 = Seq(
       """{"database":"evodb","table":"track","type":"database-create","ts":1522558000000}""",
       """{"database":"evodb","table":"track","type":"table-create","ts":1522558001000,"sql":"CREATE TABLE `track` (id INT, title LONGTEXT)"}"""
@@ -3065,8 +3064,8 @@ class StreamingSpec extends SparkSpec {
     Similarity.annIndexUpsert.fn(spark, sfDir).collect()
     val dir = Similarity.annIndexDir(sfDir) + "-frozen"
     val (cents, books) = Similarity.loadAnnModel(spark, dir)
-    val segRoot = java.nio.file.Files.createTempDirectory("graft-segs").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-segs-ckpt").toString
+    val segRoot = TempDirs("segs")
+    val ckpt = TempDirs("segs-ckpt")
     val newRows = Tables.embeddings(spark, sfDir).filter(Similarity.upsertIsNew)
       .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])]
       .collect().sortBy(_._1).toSeq
@@ -3145,8 +3144,8 @@ class StreamingSpec extends SparkSpec {
     val rows = Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val out = java.nio.file.Files.createTempDirectory("graft-zsink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-zsink-ckpt").toString
+    val out = TempDirs("zsink")
+    val ckpt = TempDirs("zsink-ckpt")
     val mem = MemoryStream[(Long, Long, Long)]
     val q = graft.streaming.StreamZorderSink.sink(
       mem.toDF().toDF("event_id", "user_id", "us"), b, out, ckpt, parts = 4)
