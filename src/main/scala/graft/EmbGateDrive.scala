@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -62,8 +60,8 @@ object EmbGateDrive {
     val bounded = sys.env.getOrElse("SPARK_GRAFT_BOUNDED_RETENTION", "")
     val spark = Session.local(extra = Session.StreamingState)
 
-    val work = sys.env.getOrElse("SPARK_GRAFT_WORK_DIR",
-      Files.createTempDirectory("graft_emb_gate").toString)
+    val workDir = WorkDir.fromEnv("graft_emb_gate")
+    val work = workDir.path
     val dot = graft.plans.VectorExpressions.floatDot _
     val gateParts = sys.env.getOrElse("SPARK_GRAFT_GATE_PARTITIONS", cpus)
     val feedFiles = 64
@@ -195,14 +193,7 @@ object EmbGateDrive {
     val distinctPairs = spark.read.parquet(s"$work/emb_pairs")
       .select("id1", "id2").distinct().count()
     println(s"""{"metric":"emb_gate_drive","sf_dir":"$sfDir","order":"$order","cap":$cap,"shards":$gateShards,"planes":$embPlanes,"n_vecs":$nVecs,"bounded":"$bounded","emb_pairs":$nPairs,"emb_pairs_distinct":$distinctPairs,"killed_at":$killAtBatch,"gate_secs":$gateSecs,"batches":[${batchLog.mkString(",")}],"dir":"$work"}""")
-    Seq("normed_store", "vecs_feed", "emb_pairs", "ckpt_embdedup").foreach { p =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(s"$work/$p"))
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      } catch { case _: Exception => }
-    }
+    workDir.clean("normed_store", "vecs_feed", "emb_pairs", "ckpt_embdedup")
     spark.stop()
   }
 }

@@ -1,9 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -33,7 +29,8 @@ object PhashGateDrive {
     val lane = sys.env.getOrElse("SPARK_GRAFT_GATE_LANE", "image")
     val spark = Session.local(extra = Session.StreamingState)
 
-    val work = Files.createTempDirectory("graft_phash_gate").toString
+    val workDir = WorkDir.temp("graft_phash_gate")
+    val work = workDir.path
     val gateParts = sys.env.getOrElse("SPARK_GRAFT_GATE_PARTITIONS", cpus)
     val feedFiles = 64
     val cap = Conf.int(spark, Conf.PhashGateBucketCapConf, 0)
@@ -75,15 +72,7 @@ object PhashGateDrive {
     val recall = fullPairs.filter(_ > 0).map(f => nPairs.toDouble / f)
     println(s"""{"metric":"phash_gate_drive","sf_dir":"$sfDir","lane":"$lane","cap":$cap,"n_docs":$nDocs,"pairs_distinct":$nPairs${
       recall.map(r => s""","recall":${math.round(r * 10000) / 10000.0}""").getOrElse("")},"gate_secs":$gateSecs,"batches":[${batches.mkString(",")}],"dir":"$work"}""")
-    Seq("feed", "pairs", "ckpt").foreach { p =>
-      try {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(s"$work/$p"))
-      } catch { case NonFatal(_) => () }
-    }
+    workDir.clean()
     spark.stop()
   }
 }

@@ -103,18 +103,7 @@ object StreamDemo {
     // THREE independent queries read it (one would delete files the other
     // two haven't committed), so it drops here, right after the drain;
     // the single-reader gate feeds below do use cleanSource.
-    def dropDir(path: String, tag: String): Unit =
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      } catch {
-        // A partial delete leaves dead bytes on the disk the later gates
-        // need — keep going (the drive may still fit) but SAY so.
-        case e: Exception =>
-          System.err.println(s"[StreamDemo] $tag cleanup incomplete: $e")
-      }
+    def dropDir(path: String, tag: String): Unit = WorkDir.remove(path, s"StreamDemo $tag")
     dropDir(s"$work/queue", "queue")
     // Count the CDC outputs NOW so replica/archive and their checkpoints
     // can free before the gates (at sf100 the embedding gate's confirm

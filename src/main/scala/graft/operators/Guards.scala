@@ -73,11 +73,14 @@ object Guards {
     * (id + packed sig + SQ8), so 10⁷ vectors ≈ 0.9 GB of driver heap +
     * broadcast — the right plan up to there (zero shuffles before the
     * exact rerank), a driver OOM well past it. The cap is a MEMORY
-    * envelope, not a perf crossover: at sf10 (200k vectors, whole-corpus
-    * query stream) serving measured 35.6 s and the segment-serving twin
-    * 35.8 s — cost parity — so the flip point is where the index stops
-    * fitting, not where it stops being fast. Deployments with small
-    * driver heaps lower it via `spark.graft.annServeCap`. */
+    * envelope, not a perf crossover: below it the serving path is never
+    * slower. Warm `lshTopK` medians over 12 alternated pairs (4 vCPU):
+    * sf0.01 0.51 s against the twin's 0.73 s, sf0.1 0.62 against 0.98,
+    * sf1 (20k vectors) 4.28 against 4.81 — serving won 35 of 36 pairs —
+    * and at sf10 (200k vectors, whole-corpus query stream) 35.6 against
+    * 35.8 s, parity. So the flip point is where the index stops fitting,
+    * not where it stops being fast. Deployments with small driver heaps
+    * lower it via `spark.graft.annServeCap`. */
   val AnnServeCap = 10000000L
 
   def annServeCap(s: SparkSession): Long =

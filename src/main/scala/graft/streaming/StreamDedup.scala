@@ -22,8 +22,8 @@ import graft.operators.Dedup
   * as packed primitive arrays of (doc_id, band signatures BELOW the
   * group's own band — all the election reads) — FIXED ≤136 B per member
   * (avg ~68) regardless of document length — and emits each bucket-mate
-  * pair as a CANDIDATE exactly once (smallest-shared-band election; see
-  * [[PackedBandMembers]] for why the layout is packed). Exact Jaccard confirm is DOWNSTREAM and
+  * pair as a CANDIDATE exactly once (smallest-shared-band election in
+  * [[BucketGate]]; see [[PackedBandMembers]] for why the layout is packed). Exact Jaccard confirm is DOWNSTREAM and
   * STATELESS: a stream-static join against the corpus/archive plus the
   * codegen'd [[graft.plans.SortedJaccard]] kernel — the batch operator's
   * own band-join → candidates → confirm-join topology.
@@ -80,33 +80,6 @@ object StreamDedup {
     * carries across). */
   final case class PackedBandMembers(ids: Array[Long], pre: Array[Long])
 
-  /** True iff `p` (a newcomer's b-entry signature prefix) shares a
-    * signature with member j of `pre` at any band below b — i.e. the
-    * pair was already elected on an earlier band. The SINGLE source of
-    * the election comparison (plus the buffer twin below); primitive
-    * while-loops per the repo's hot-path rule. */
-  private def sharesBelow(p: Array[Long], pre: Array[Long], j: Int, b: Int): Boolean = {
-    var i = 0
-    val base = j * b
-    while (i < b) {
-      if (p(i) == pre(base + i)) return true
-      i += 1
-    }
-    false
-  }
-
-  /** [[sharesBelow]] against the within-batch newcomer buffer. */
-  private def sharesBelowBuf(p: Array[Long],
-      pre: scala.collection.mutable.ArrayBuffer[Long], k: Int, b: Int): Boolean = {
-    var i = 0
-    val base = k * b
-    while (i < b) {
-      if (p(i) == pre(base + i)) return true
-      i += 1
-    }
-    false
-  }
-
   /** Candidate pairs from a streaming (doc_id, text) frame, each pair
     * emitted exactly once (when its later doc arrives) via the
     * smallest-shared-band election — no confirm, no shingle state. */
@@ -128,35 +101,14 @@ object StreamDedup {
         case ((bIdx, _), rows, state) =>
           val st = state.getOption
             .getOrElse(PackedBandMembers(Array.emptyLongArray, Array.emptyLongArray))
-          val newIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-          val newPre = scala.collection.mutable.ArrayBuffer.empty[Long]
+          val g = BucketGate(BucketGate.Longs, bIdx, 0, st.ids, st.pre)(
+            rows.map { case (_, _, id, p) => BucketGate.In(id, p, ()) })
           val out = scala.collection.mutable.ArrayBuffer.empty[BandHit]
-          // doc_id order makes within-batch pairing deterministic and
-          // independent of micro-batch chunking: a batch's docs join the
-          // bucket one at a time, each paired against ALL earlier
-          // members (previous batches AND earlier rows of this batch).
-          rows.toSeq.sortBy(_._3).foreach { case (_, _, id, p) =>
-            if (!st.ids.contains(id) && !newIds.contains(id)) {
-              var j = 0
-              while (j < st.ids.length) {
-                if (!sharesBelow(p, st.pre, j, bIdx))
-                  out += BandHit(math.min(id, st.ids(j)),
-                    math.max(id, st.ids(j)), bIdx)
-                j += 1
-              }
-              var k = 0
-              while (k < newIds.length) {
-                if (!sharesBelowBuf(p, newPre, k, bIdx))
-                  out += BandHit(math.min(id, newIds(k)),
-                    math.max(id, newIds(k)), bIdx)
-                k += 1
-              }
-              newIds += id
-              newPre ++= p
-            }
+          g.pair { (i, j) =>
+            val id = g.in(i).id
+            out += BandHit(math.min(id, g.id(j)), math.max(id, g.id(j)), bIdx)
           }
-          if (newIds.nonEmpty)
-            state.update(PackedBandMembers(st.ids ++ newIds, st.pre ++ newPre))
+          g.commit(state)(PackedBandMembers(g.ids, g.pre))
           out.iterator
       }
   }
@@ -217,6 +169,11 @@ object StreamDedup {
   final case class CandidatePair(id1: Long, id2: Long, band_idx: Int,
       ts: java.sql.Timestamp)
 
+  /** [[PackedBandMembers]] plus each member's event-time millis (for
+    * retention eviction). */
+  final case class PackedTimedBandMembers(ids: Array[Long], pre: Array[Long],
+      tsMs: Array[Long])
+
   /** RETENTION-BOUNDED candidate stage of the near-dup gate — the part
     * that holds state, sized so that a stored document costs a FIXED
     * ~200 B per band bucket regardless of document length.
@@ -249,11 +206,6 @@ object StreamDedup {
     * Bounds: members older than the watermark are evicted before pairing;
     * an event-time timeout at (newest member + 1 ms) sweeps idle buckets,
     * so state death does not require new traffic. */
-  /** [[PackedBandMembers]] plus each member's event-time millis (for
-    * retention eviction). */
-  final case class PackedTimedBandMembers(ids: Array[Long], pre: Array[Long],
-      tsMs: Array[Long])
-
   def candidatesBounded(docs: DataFrame,
       retention: String): Dataset[CandidatePair] = {
     val spark = docs.sparkSession
@@ -264,74 +216,31 @@ object StreamDedup {
       .flatMap { case (id, text, ts) =>
         val sigs = bandSigs(text)
         sigs.iterator.zipWithIndex
-          .map { case (sig, bIdx) => (bIdx, sig, id, sigs.take(bIdx).toSeq, ts) }
+          .map { case (sig, bIdx) => (bIdx, sig, id, sigs.take(bIdx), ts) }
       }
       .toDF("band_idx", "band_sig", "doc_id", "band_sigs", "ts")
       .withWatermark("ts", retention)
-      .as[(Int, Long, Long, Seq[Long], java.sql.Timestamp)]
+      .as[(Int, Long, Long, Array[Long], java.sql.Timestamp)]
     bands
       .groupByKey { case (bIdx, sig, _, _, _) => (bIdx, sig) }
       .flatMapGroupsWithState[PackedTimedBandMembers, CandidatePair](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         case ((bIdx, _), rows, state) =>
-          val wmMs = state.getCurrentWatermarkMs()
-          val st0 = state.getOption.getOrElse(
+          val st = state.getOption.getOrElse(
             PackedTimedBandMembers(Array.emptyLongArray, Array.emptyLongArray,
               Array.emptyLongArray))
-          // retention eviction first: expired members are not candidates
-          // (arrays rebuilt only when something actually expired)
-          val st =
-            if (!st0.tsMs.exists(_ < wmMs)) st0
-            else {
-              val keep = st0.tsMs.indices.filter(st0.tsMs(_) >= wmMs)
-              PackedTimedBandMembers(
-                keep.map(st0.ids(_)).toArray,
-                keep.iterator.flatMap(j =>
-                  (0 until bIdx).iterator.map(i => st0.pre(j * bIdx + i))).toArray,
-                keep.map(st0.tsMs(_)).toArray)
-            }
-          val evicted = st ne st0
-          val newIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-          val newPre = scala.collection.mutable.ArrayBuffer.empty[Long]
-          val newTs = scala.collection.mutable.ArrayBuffer.empty[Long]
+          // exactly-once lane election: a pair reports on the smallest
+          // band the two docs share
+          val g = BucketGate(BucketGate.Longs, bIdx, 0, st.ids, st.pre, st.tsMs,
+              state.getCurrentWatermarkMs())(
+            rows.map { case (_, _, id, p, ts) => BucketGate.In(id, p, ts, tsMs = ts.getTime) })
           val out = scala.collection.mutable.ArrayBuffer.empty[CandidatePair]
-          // doc_id order makes within-batch pairing deterministic and
-          // independent of micro-batch chunking. Exactly-once lane
-          // election: a pair reports on the smallest band the two docs
-          // share — elected HERE iff no band below bIdx already shares.
-          rows.toSeq.sortBy(_._3).foreach { case (_, _, id, pSeq, ts) =>
-            if (!st.ids.contains(id) && !newIds.contains(id)) {
-              val p = pSeq.toArray // unbox once; the loops below stay primitive
-              var j = 0
-              while (j < st.ids.length) {
-                if (!sharesBelow(p, st.pre, j, bIdx))
-                  out += CandidatePair(math.min(id, st.ids(j)),
-                    math.max(id, st.ids(j)), bIdx, ts)
-                j += 1
-              }
-              var k = 0
-              while (k < newIds.length) {
-                if (!sharesBelowBuf(p, newPre, k, bIdx))
-                  out += CandidatePair(math.min(id, newIds(k)),
-                    math.max(id, newIds(k)), bIdx, ts)
-                k += 1
-              }
-              newIds += id
-              newPre ++= p
-              newTs += ts.getTime
-            }
+          g.pair { (i, j) =>
+            val in = g.in(i)
+            out += CandidatePair(math.min(in.id, g.id(j)), math.max(in.id, g.id(j)),
+              bIdx, in.row)
           }
-          val ids = st.ids ++ newIds
-          if (ids.isEmpty) state.remove()
-          else {
-            if (newIds.nonEmpty || evicted)
-              state.update(PackedTimedBandMembers(ids, st.pre ++ newPre,
-                st.tsMs ++ newTs))
-            // fire once the watermark passes the newest member: every
-            // member is then expired and the bucket removes itself
-            val newest = (st.tsMs.iterator ++ newTs.iterator).max
-            if (newest + 1L > wmMs) state.setTimeoutTimestamp(newest + 1L)
-          }
+          g.commit(state)(PackedTimedBandMembers(g.ids, g.pre, g.tsMs))
           out.iterator
       }
   }

@@ -37,7 +37,8 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   * the re-encode + RocksDB changelog churn made the gate ~9 min per
   * 125k-vector micro-batch. Primitive arrays encode as one
   * UnsafeArrayData memcopy, the per-batch merge does ONE state.update
-  * per touched group, and member bytes drop ~2.6× (8 + 4·tIdx vs ~100).
+  * per touched group ([[BucketGate]]), and member bytes drop ~2.6×
+  * (8 + 4·tIdx vs ~100).
   * Shuffle rows shrink identically (prefix rides the exchange, not the
   * full key vector).
   *
@@ -120,34 +121,6 @@ object StreamEmbDedup {
     * stored). Table 0 groups store ids only. */
   final case class PackedVecMembers(ids: Array[Long], pre: Array[Int])
 
-  /** True iff `p` (a newcomer's t-entry bucket prefix) shares a bucket
-    * with member j of `pre` at any table below t — i.e. the pair was
-    * already elected on an earlier table. The SINGLE source of the
-    * election comparison (plus the buffer twin below — review: the loop
-    * was once inlined at every call site); primitive-array while-loops,
-    * not HOFs, per the repo's hot-path rule. */
-  private def sharesBelow(p: Array[Int], pre: Array[Int], j: Int, t: Int): Boolean = {
-    var i = 0
-    val base = j * t
-    while (i < t) {
-      if (p(i) == pre(base + i)) return true
-      i += 1
-    }
-    false
-  }
-
-  /** [[sharesBelow]] against the within-batch newcomer buffer. */
-  private def sharesBelowBuf(p: Array[Int],
-      pre: scala.collection.mutable.ArrayBuffer[Int], k: Int, t: Int): Boolean = {
-    var i = 0
-    val base = k * t
-    while (i < t) {
-      if (p(i) == pre(base + i)) return true
-      i += 1
-    }
-    false
-  }
-
   /** Candidate pairs from a streaming (vec_id, embedding) frame, each
     * pair emitted exactly once (when its later vector arrives).
     * `nPlanes`: bucket bits per table — size with [[planesForCorpus]]
@@ -168,11 +141,10 @@ object StreamEmbDedup {
     * missed iff the earlier vector rotated out of the SMALLEST
     * signature-shared table's ring before the later one arrived —
     * a higher shared table that still holds it never re-elects,
-    * because sharesBelow sees the smaller shared table in the
+    * because [[BucketGate]]'s election sees the smaller shared table in the
     * signatures (bucket occupancy differs per table, so this is
     * strictly more misses than "rotated out of every shared table").
-    * One
-    * contract narrows: the unbounded gate's `contains` check also
+    * One contract narrows: the unbounded gate's membership check also
     * deduped a REDELIVERED vec_id forever, while a ring only remembers
     * the newest N — under the cap, feed-level exactly-once (which the
     * file/Kafka sources provide) is the idempotence boundary. Default 0
@@ -188,8 +160,8 @@ object StreamEmbDedup {
     // shards (store row + K-1 probe rows per table); each prior member
     // lives in exactly one shard, so a cross-batch pair is still found
     // exactly once, and a within-batch pair is elected only in the
-    // earlier member's store shard (probe rows never enter the batch
-    // buffer). Election prefixes don't see shards. Under the ring cap,
+    // earlier member's store shard (probe rows never store; see
+    // [[BucketGate]]). Election prefixes don't see shards. Under the ring cap,
     // each shard keeps cap/K so the bucket total stays ≈ cap.
     val shards = math.max(1, graft.Conf.int(spark, graft.Conf.EmbGateShardsConf, 1))
     val shardCap =
@@ -216,88 +188,14 @@ object StreamEmbDedup {
         case ((tIdx, _), rows, state) =>
           val st = state.getOption
             .getOrElse(PackedVecMembers(Array.emptyLongArray, Array.emptyIntArray))
+          val g = BucketGate(BucketGate.Ints, tIdx, shardCap, st.ids, st.pre)(
+            rows.map { case (_, _, id, p, store) => BucketGate.In(id, p, (), store) })
           val out = scala.collection.mutable.ArrayBuffer.empty[VecCandidate]
-          // probe rows of the same id may repeat within a batch
-          // (redelivery); they pair but never store, so dedupe per batch
-          val probeSeen = scala.collection.mutable.HashSet.empty[Long]
-          if (shardCap > 0) {
-            // RING path: state is ≤ cap members, so seeding working
-            // buffers from it is one bounded copy per touched group.
-            // ArrayBuffer boxing is a deliberate exception to the
-            // primitive-array hot-loop rule: the CAP bounds every loop
-            // here (the unbounded path keeps primitive arrays because
-            // nothing bounds it), and the sf100 drive measured the ring
-            // flat at ~67 s/batch — the quadratic pairing it removes was
-            // the cost, not the constant.
-            val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-            val pre = scala.collection.mutable.ArrayBuffer.empty[Int]
-            ids ++= st.ids
-            pre ++= st.pre
-            var changed = false
-            // truncate an OVERSIZED restored ring to the cap BEFORE
-            // pairing (r16 advice): a checkpoint written uncapped or at a
-            // larger cap restores more than the cap, and the per-insert
-            // one-at-a-time eviction below would keep pairing work O(old
-            // size) for thousands of batches — the knob's motivating
-            // rescue (flip the cap on a stuck drive, restart from its
-            // checkpoint) must bound the FIRST batch already.
-            if (ids.length > shardCap) {
-              val drop = ids.length - shardCap
-              ids.remove(0, drop)
-              if (tIdx > 0) pre.remove(0, drop * tIdx)
-              changed = true
-            }
-            rows.toSeq.sortBy(_._3).foreach { case (_, _, id, p, store) =>
-              if (if (store) !ids.contains(id) else probeSeen.add(id)) {
-                var j = 0
-                while (j < ids.length) {
-                  if (!sharesBelowBuf(p, pre, j, tIdx))
-                    out += VecCandidate(math.min(id, ids(j)),
-                      math.max(id, ids(j)), tIdx)
-                  j += 1
-                }
-                if (store) {
-                  ids += id
-                  pre ++= p
-                  while (ids.length > shardCap) { // evict oldest members
-                    ids.remove(0)
-                    if (tIdx > 0) pre.remove(0, tIdx)
-                  }
-                  changed = true
-                }
-              }
-            }
-            if (changed) state.update(PackedVecMembers(ids.toArray, pre.toArray))
-          } else {
-            val newIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-            val newPre = scala.collection.mutable.ArrayBuffer.empty[Int]
-            // vec_id order: deterministic pairing independent of chunking
-            rows.toSeq.sortBy(_._3).foreach { case (_, _, id, p, store) =>
-              if (if (store) !st.ids.contains(id) && !newIds.contains(id)
-                  else probeSeen.add(id)) {
-                var j = 0
-                while (j < st.ids.length) {
-                  if (!sharesBelow(p, st.pre, j, tIdx))
-                    out += VecCandidate(math.min(id, st.ids(j)),
-                      math.max(id, st.ids(j)), tIdx)
-                  j += 1
-                }
-                var k = 0
-                while (k < newIds.length) {
-                  if (!sharesBelowBuf(p, newPre, k, tIdx))
-                    out += VecCandidate(math.min(id, newIds(k)),
-                      math.max(id, newIds(k)), tIdx)
-                  k += 1
-                }
-                if (store) {
-                  newIds += id
-                  newPre ++= p
-                }
-              }
-            }
-            if (newIds.nonEmpty)
-              state.update(PackedVecMembers(st.ids ++ newIds, st.pre ++ newPre))
+          g.pair { (i, j) =>
+            val id = g.in(i).id
+            out += VecCandidate(math.min(id, g.id(j)), math.max(id, g.id(j)), tIdx)
           }
+          g.commit(state)(PackedVecMembers(g.ids, g.pre))
           out.iterator
       }
   }
@@ -447,128 +345,32 @@ object StreamEmbDedup {
         val buckets = tableBuckets(v, nPlanes)
         val own = java.lang.Math.floorMod(id, shards.toLong).toInt
         buckets.iterator.zipWithIndex.flatMap { case (b, t) =>
-          val p = buckets.take(t).toSeq
+          val p = buckets.take(t)
           (0 until shards).iterator
             .map(sh => (t, b * shards + sh, id, p, ts, sh == own))
         }
       }
       .toDF("table_idx", "bucket", "vec_id", "buckets", "ts", "store")
       .withWatermark("ts", retention)
-      .as[(Int, Int, Long, Seq[Int], java.sql.Timestamp, Boolean)]
+      .as[(Int, Int, Long, Array[Int], java.sql.Timestamp, Boolean)]
       .groupByKey { case (t, cb, _, _, _, _) => (t, cb) }
       .flatMapGroupsWithState[PackedTimedVecMembers, TimedVecCandidate](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         case ((tIdx, _), rows, state) =>
-          val wmMs = state.getCurrentWatermarkMs()
-          val st0 = state.getOption.getOrElse(
+          val st = state.getOption.getOrElse(
             PackedTimedVecMembers(Array.emptyLongArray, Array.emptyIntArray,
               Array.emptyLongArray))
-          // retention eviction first: expired members are not candidates
-          // (arrays rebuilt only when something actually expired)
-          val st =
-            if (!st0.tsMs.exists(_ < wmMs)) st0
-            else {
-              val keep = st0.tsMs.indices.filter(st0.tsMs(_) >= wmMs)
-              PackedTimedVecMembers(
-                keep.map(st0.ids(_)).toArray,
-                keep.iterator.flatMap(j =>
-                  (0 until tIdx).iterator.map(i => st0.pre(j * tIdx + i))).toArray,
-                keep.map(st0.tsMs(_)).toArray)
-            }
-          val evicted = st ne st0
+          val g = BucketGate(BucketGate.Ints, tIdx, shardCap, st.ids, st.pre, st.tsMs,
+              state.getCurrentWatermarkMs())(
+            rows.map { case (_, _, id, p, ts, store) =>
+              BucketGate.In(id, p, ts, store, ts.getTime) })
           val out = scala.collection.mutable.ArrayBuffer.empty[TimedVecCandidate]
-          // probe-row batch dedupe (shards > 1): pair, never store
-          val probeSeen = scala.collection.mutable.HashSet.empty[Long]
-          if (shardCap > 0) {
-            // RING path (r17): expired members are already gone (above —
-            // the watermark-first half of the eviction order); what's
-            // left truncates oldest-by-arrival to the cap BEFORE pairing,
-            // so a restart from an uncapped/larger-cap checkpoint does
-            // O(cap) work from its first batch.
-            val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-            val pre = scala.collection.mutable.ArrayBuffer.empty[Int]
-            val tsMs = scala.collection.mutable.ArrayBuffer.empty[Long]
-            ids ++= st.ids
-            pre ++= st.pre
-            tsMs ++= st.tsMs
-            var changed = evicted
-            if (ids.length > shardCap) {
-              val drop = ids.length - shardCap
-              ids.remove(0, drop)
-              if (tIdx > 0) pre.remove(0, drop * tIdx)
-              tsMs.remove(0, drop)
-              changed = true
-            }
-            rows.toSeq.sortBy(_._3).foreach { case (_, _, id, pSeq, ts, store) =>
-              if (if (store) !ids.contains(id) else probeSeen.add(id)) {
-                val p = pSeq.toArray
-                var j = 0
-                while (j < ids.length) {
-                  if (!sharesBelowBuf(p, pre, j, tIdx))
-                    out += TimedVecCandidate(math.min(id, ids(j)),
-                      math.max(id, ids(j)), tIdx, ts)
-                  j += 1
-                }
-                if (store) {
-                  ids += id
-                  pre ++= p
-                  tsMs += ts.getTime
-                  while (ids.length > shardCap) { // evict oldest members
-                    ids.remove(0)
-                    if (tIdx > 0) pre.remove(0, tIdx)
-                    tsMs.remove(0)
-                  }
-                  changed = true
-                }
-              }
-            }
-            if (ids.isEmpty) state.remove()
-            else {
-              if (changed)
-                state.update(PackedTimedVecMembers(ids.toArray, pre.toArray,
-                  tsMs.toArray))
-              val newest = tsMs.max
-              if (newest + 1L > wmMs) state.setTimeoutTimestamp(newest + 1L)
-            }
-          } else {
-          val newIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-          val newPre = scala.collection.mutable.ArrayBuffer.empty[Int]
-          val newTs = scala.collection.mutable.ArrayBuffer.empty[Long]
-          rows.toSeq.sortBy(_._3).foreach { case (_, _, id, pSeq, ts, store) =>
-            if (if (store) !st.ids.contains(id) && !newIds.contains(id)
-                else probeSeen.add(id)) {
-              val p = pSeq.toArray // unbox once; the loops below stay primitive
-              var j = 0
-              while (j < st.ids.length) {
-                if (!sharesBelow(p, st.pre, j, tIdx))
-                  out += TimedVecCandidate(math.min(id, st.ids(j)),
-                    math.max(id, st.ids(j)), tIdx, ts)
-                j += 1
-              }
-              var k = 0
-              while (k < newIds.length) {
-                if (!sharesBelowBuf(p, newPre, k, tIdx))
-                  out += TimedVecCandidate(math.min(id, newIds(k)),
-                    math.max(id, newIds(k)), tIdx, ts)
-                k += 1
-              }
-              if (store) {
-                newIds += id
-                newPre ++= p
-                newTs += ts.getTime
-              }
-            }
+          g.pair { (i, j) =>
+            val in = g.in(i)
+            out += TimedVecCandidate(math.min(in.id, g.id(j)), math.max(in.id, g.id(j)),
+              tIdx, in.row)
           }
-          val ids = st.ids ++ newIds
-          if (ids.isEmpty) state.remove()
-          else {
-            if (newIds.nonEmpty || evicted)
-              state.update(PackedTimedVecMembers(ids, st.pre ++ newPre,
-                st.tsMs ++ newTs))
-            val newest = (st.tsMs.iterator ++ newTs.iterator).max
-            if (newest + 1L > wmMs) state.setTimeoutTimestamp(newest + 1L)
-          }
-          }
+          g.commit(state)(PackedTimedVecMembers(g.ids, g.pre, g.tsMs))
           out.iterator
       }
   }

@@ -14,17 +14,17 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   * 4×16-bit band-bucket state, emitting Hamming ≤ 3 pairs exactly once.
   *
   * Topology (the round-9/15 lean-state shape shared with the sibling
-  * gates): a typed flatMap hashes each payload and emits its 4
-  * (band_idx, band_val) rows; `flatMapGroupsWithState` keyed on the
-  * band bucket stores packed primitive arrays of (doc_id, band values
-  * BELOW the group's band, hash halves) and elects each bucket-mate
-  * pair once on the smallest shared band. Unlike the text/vector gates,
-  * the exact confirm runs IN-OP: the full content a Hamming confirm
-  * needs is the 16-byte hash already in state — storing it IS the lean
-  * choice (the text gate moved its confirm downstream because shingle
-  * sets are O(tokens); here a downstream join would cost more than the
-  * 16 B it saves). ~(24 + 4·bIdx) B per member, payload-size
-  * independent.
+  * gates through [[BucketGate]]): a typed flatMap hashes each payload and
+  * emits its 4 (band_idx, band_val) rows; `flatMapGroupsWithState` keyed
+  * on the band bucket stores packed primitive arrays of (doc_id, band
+  * values BELOW the group's band, hash halves) and elects each
+  * bucket-mate pair once on the smallest shared band. Unlike the
+  * text/vector gates, the exact confirm runs IN-OP: the full content a
+  * Hamming confirm needs is the 16-byte hash already in state — storing
+  * it IS the lean choice (the text gate moved its confirm downstream
+  * because shingle sets are O(tokens); here a downstream join would cost
+  * more than the 16 B it saves). ~(24 + 4·bIdx) B per member,
+  * payload-size independent.
   *
   * Recall contract: Hamming ≤ 3 with 4 bands is EXACT by pigeonhole —
   * 3 flipped bits cannot touch all 4 bands, so every qualifying pair is
@@ -60,27 +60,6 @@ object StreamPhashDedup {
     (lo & 0xFFFFL).toInt, ((lo >>> 16) & 0xFFFFL).toInt,
     (hi & 0xFFFFL).toInt, ((hi >>> 16) & 0xFFFFL).toInt)
 
-  private def sharesBelow(p: Array[Int], pre: Array[Int], j: Int, b: Int): Boolean = {
-    var i = 0
-    val base = j * b
-    while (i < b) {
-      if (p(i) == pre(base + i)) return true
-      i += 1
-    }
-    false
-  }
-
-  private def sharesBelowBuf(p: Array[Int],
-      pre: scala.collection.mutable.ArrayBuffer[Int], k: Int, b: Int): Boolean = {
-    var i = 0
-    val base = k * b
-    while (i < b) {
-      if (p(i) == pre(base + i)) return true
-      i += 1
-    }
-    false
-  }
-
   /** Confirmed Hamming ≤ `maxHamming` pairs from a streaming
     * (doc_id, text) frame, each pair emitted exactly once (when its
     * later payload arrives). `maxHamming` above 3 voids the pigeonhole
@@ -102,11 +81,12 @@ object StreamPhashDedup {
     * duplication-sized on stop-frame corpora (sf10 measured band df 3291
     * with 22 buckets carrying 72% of all candidate rows), so
     * [[graft.Conf.PhashGateBucketCapConf]] > 0 bounds every (band_idx,
-    * band_val) group to a newest-N ring — the [[StreamEmbDedup]] cap
-    * ported verbatim. Election stays signature-based (the newcomer's
-    * band prefix vs the member's stored prefix), so a capped gate never
-    * DUPLICATES a pair; it misses one iff the earlier image rotated out
-    * of the smallest-shared-band ring before the later arrived. Under
+    * band_val) group to a newest-N ring — the [[StreamEmbDedup]] cap,
+    * through the same [[BucketGate]]. Election stays signature-based
+    * (the newcomer's band prefix vs the member's stored prefix), so a
+    * capped gate never DUPLICATES a pair; it misses one iff the earlier
+    * image rotated out of the smallest-shared-band ring before the later
+    * arrived. Under
     * the cap, redelivery idempotence narrows to the ring window — feed
     * exactly-once is the boundary, as in the emb gate. Default 0 keeps
     * the exact pigeonhole contract. */
@@ -134,99 +114,19 @@ object StreamPhashDedup {
           val st = state.getOption.getOrElse(PackedPhashMembers(
             Array.emptyLongArray, Array.emptyIntArray,
             Array.emptyLongArray, Array.emptyLongArray))
+          val g = BucketGate(BucketGate.Ints, bIdx, bucketCap, st.ids, st.pre)(
+            rows.map(r => BucketGate.In(r._3, r._4, r)))
           val out = scala.collection.mutable.ArrayBuffer.empty[PhashHit]
-          // doc_id order: deterministic pairing independent of chunking
-          val rs = rows.toSeq.sortBy(_._3)
-          // Ring mechanics ONLY when this batch could overflow the cap:
-          // a ring that never evicts is state-identical to plain append,
-          // and the append path skips the per-bucket unpack/repack that
-          // made a blanket ring path SLOWER than uncapped on the sf10
-          // drive (56 vs 28 s — most buckets are far under cap; only the
-          // stop-frame hot buckets should pay ring costs). rs.length
-          // over-counts distinct newcomers, which only errs toward the
-          // (correct) ring path.
-          if (bucketCap > 0 && st.ids.length + rs.length > bucketCap) {
-            // RING path: every loop is cap-bounded, so buffer boxing is
-            // fine (the unbounded path keeps primitive arrays because
-            // nothing bounds it) — the StreamEmbDedup.candidates shape.
-            val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-            val pre = scala.collection.mutable.ArrayBuffer.empty[Int]
-            val his = scala.collection.mutable.ArrayBuffer.empty[Long]
-            val los = scala.collection.mutable.ArrayBuffer.empty[Long]
-            ids ++= st.ids; pre ++= st.pre; his ++= st.hi; los ++= st.lo
-            var changed = false
-            // truncate an OVERSIZED restored ring BEFORE pairing (the r16
-            // emb-gate rescue: flip the cap on a stuck drive, restart from
-            // its uncapped checkpoint — the FIRST batch must already be
-            // cap-bounded)
-            if (ids.length > bucketCap) {
-              val drop = ids.length - bucketCap
-              ids.remove(0, drop); his.remove(0, drop); los.remove(0, drop)
-              if (bIdx > 0) pre.remove(0, drop * bIdx)
-              changed = true
-            }
-            rs.foreach { case (_, _, id, p, hi, lo) =>
-              if (!ids.contains(id)) {
-                var j = 0
-                while (j < ids.length) {
-                  if (!sharesBelowBuf(p, pre, j, bIdx)) {
-                    val d = java.lang.Long.bitCount(hi ^ his(j)) +
-                      java.lang.Long.bitCount(lo ^ los(j))
-                    if (d <= maxHamming)
-                      out += PhashHit(math.min(id, ids(j)),
-                        math.max(id, ids(j)), d.toLong, bIdx)
-                  }
-                  j += 1
-                }
-                ids += id; pre ++= p; his += hi; los += lo
-                while (ids.length > bucketCap) { // evict oldest members
-                  ids.remove(0); his.remove(0); los.remove(0)
-                  if (bIdx > 0) pre.remove(0, bIdx)
-                }
-                changed = true
-              }
-            }
-            if (changed) state.update(PackedPhashMembers(
-              ids.toArray, pre.toArray, his.toArray, los.toArray))
-          } else {
-            val newIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-            val newPre = scala.collection.mutable.ArrayBuffer.empty[Int]
-            val newHi = scala.collection.mutable.ArrayBuffer.empty[Long]
-            val newLo = scala.collection.mutable.ArrayBuffer.empty[Long]
-            rs.foreach { case (_, _, id, p, hi, lo) =>
-              if (!st.ids.contains(id) && !newIds.contains(id)) {
-                var j = 0
-                while (j < st.ids.length) {
-                  if (!sharesBelow(p, st.pre, j, bIdx)) {
-                    val d = java.lang.Long.bitCount(hi ^ st.hi(j)) +
-                      java.lang.Long.bitCount(lo ^ st.lo(j))
-                    if (d <= maxHamming)
-                      out += PhashHit(math.min(id, st.ids(j)),
-                        math.max(id, st.ids(j)), d.toLong, bIdx)
-                  }
-                  j += 1
-                }
-                var k = 0
-                while (k < newIds.length) {
-                  if (!sharesBelowBuf(p, newPre, k, bIdx)) {
-                    val d = java.lang.Long.bitCount(hi ^ newHi(k)) +
-                      java.lang.Long.bitCount(lo ^ newLo(k))
-                    if (d <= maxHamming)
-                      out += PhashHit(math.min(id, newIds(k)),
-                        math.max(id, newIds(k)), d.toLong, bIdx)
-                  }
-                  k += 1
-                }
-                newIds += id
-                newPre ++= p
-                newHi += hi
-                newLo += lo
-              }
-            }
-            if (newIds.nonEmpty)
-              state.update(PackedPhashMembers(st.ids ++ newIds,
-                st.pre ++ newPre, st.hi ++ newHi, st.lo ++ newLo))
+          g.pair { (i, j) =>
+            val r = g.in(i).row
+            val restored = j < g.n
+            val d = java.lang.Long.bitCount(r._5 ^ (if (restored) st.hi(j) else g.row(j)._5)) +
+              java.lang.Long.bitCount(r._6 ^ (if (restored) st.lo(j) else g.row(j)._6))
+            if (d <= maxHamming)
+              out += PhashHit(math.min(r._3, g.id(j)), math.max(r._3, g.id(j)), d.toLong, bIdx)
           }
+          g.commit(state)(PackedPhashMembers(g.ids, g.pre,
+            g.keep(st.hi)(_._5), g.keep(st.lo)(_._6)))
           out.iterator
       }
   }
@@ -323,89 +223,33 @@ object StreamPhashDedup {
         case (h, rows, state) =>
           val st = state.getOption.getOrElse(PackedVideoMembers(
             Array.emptyLongArray, Array.emptyIntArray, Array.emptyLongArray))
+          // no prefix: the election is the smallest shared hash, checked
+          // in the confirm below
+          val g = BucketGate(BucketGate.Ints, 0, bucketCap, st.ids, Array.emptyIntArray)(
+            rows.map { case (_, id, hs) => BucketGate.In(id, Array.emptyIntArray, hs) })
           val out = scala.collection.mutable.ArrayBuffer.empty[VideoHit]
-          def confirmInto(id: Long, hs: Array[Long], mid: Long,
-              mFlat: Array[Long], mFrom: Int, mTo: Int): Unit = {
+          def confirm(i: Int, j: Int, mFlat: Array[Long], mFrom: Int, mTo: Int): Unit = {
+            val hs = g.in(i).row
             val shared = intersectCount(hs, mFlat, mFrom, mTo)
             val mn = math.min(hs.length, mTo - mFrom)
             if (shared >= 2 && 2 * shared >= mn &&
                 minShared(hs, mFlat, mFrom, mTo).contains(h))
-              out += VideoHit(math.min(id, mid), math.max(id, mid),
+              out += VideoHit(math.min(g.in(i).id, g.id(j)), math.max(g.in(i).id, g.id(j)),
                 shared.toLong, (100L * shared) / mn)
           }
-          // vec order: deterministic pairing independent of chunking
-          val rs = rows.toSeq.sortBy(_._2)
-          // ring mechanics only when the batch could overflow the cap —
-          // see hitsWith: a never-evicting ring equals plain append, and
-          // the unpack/repack of full hash sets per touched bucket is
-          // exactly what must stay confined to the hot buckets
-          if (bucketCap > 0 && st.ids.length + rs.length > bucketCap) {
-            // RING path: ≤ cap members per bucket; buffers hold each
-            // member's set unflattened (cap-bounded boxing, the
-            // StreamEmbDedup ring shape); repacked on update.
-            val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-            val sets = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-            var j0 = 0
-            while (j0 < st.ids.length) {
-              val from = if (j0 == 0) 0 else st.offs(j0 - 1)
-              ids += st.ids(j0)
-              sets += java.util.Arrays.copyOfRange(st.hsFlat, from, st.offs(j0))
-              j0 += 1
-            }
-            var changed = false
-            // truncate an OVERSIZED restored ring BEFORE pairing
-            if (ids.length > bucketCap) {
-              val drop = ids.length - bucketCap
-              ids.remove(0, drop); sets.remove(0, drop)
-              changed = true
-            }
-            rs.foreach { case (_, id, hs) =>
-              if (!ids.contains(id)) {
-                var j = 0
-                while (j < ids.length) {
-                  confirmInto(id, hs, ids(j), sets(j), 0, sets(j).length)
-                  j += 1
-                }
-                ids += id
-                sets += hs
-                while (ids.length > bucketCap) { // evict oldest members
-                  ids.remove(0); sets.remove(0)
-                }
-                changed = true
-              }
-            }
-            if (changed) {
-              var off = 0
-              val offs = sets.map { s => off += s.length; off }.toArray
-              state.update(PackedVideoMembers(
-                ids.toArray, offs, sets.toArray.flatten))
-            }
-          } else {
-            val newIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-            val newSets = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-            rs.foreach { case (_, id, hs) =>
-              if (!st.ids.contains(id) && !newIds.contains(id)) {
-                var j = 0
-                while (j < st.ids.length) {
-                  val from = if (j == 0) 0 else st.offs(j - 1)
-                  confirmInto(id, hs, st.ids(j), st.hsFlat, from, st.offs(j))
-                  j += 1
-                }
-                var k = 0
-                while (k < newIds.length) {
-                  confirmInto(id, hs, newIds(k), newSets(k), 0, newSets(k).length)
-                  k += 1
-                }
-                newIds += id
-                newSets += hs
-              }
-            }
-            if (newIds.nonEmpty) {
-              val flat = st.hsFlat ++ newSets.flatten
-              var off = if (st.offs.isEmpty) 0 else st.offs.last
-              val offs = st.offs ++ newSets.map { s => off += s.length; off }
-              state.update(PackedVideoMembers(st.ids ++ newIds.toArray, offs, flat))
-            }
+          g.pair { (i, j) =>
+            if (j < g.n) confirm(i, j, st.hsFlat, if (j == 0) 0 else st.offs(j - 1), st.offs(j))
+            else confirm(i, j, g.row(j), 0, g.row(j).length)
+          }
+          g.commit(state) {
+            // kept restored members are one suffix of hsFlat; re-base it
+            val from = math.min(g.keptFrom, g.n)
+            val base = if (from == 0) 0 else st.offs(from - 1)
+            val sets = g.keptRows
+            PackedVideoMembers(g.ids,
+              st.offs.drop(from).map(_ - base) ++
+                sets.scanLeft(st.hsFlat.length - base)(_ + _.length).drop(1),
+              st.hsFlat.drop(base) ++ sets.flatten)
           }
           out.iterator
       }

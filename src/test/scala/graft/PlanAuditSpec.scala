@@ -1053,4 +1053,21 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(maps.isEmpty, s"hand-rolled memo maps (use graft.Memo): $maps")
   }
+
+  test("the dedup gates pair through one kernel: only BucketGate elects or evicts") {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/streaming")
+    val walk = java.nio.file.Files.list(dir)
+    val srcs = try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p)).toList
+      finally walk.close()
+    // a prefix-election check or a member-ring eviction loop (an
+    // ArrayBuffer.remove(0 …) or a `while (x.length > cap)` trim)
+    val copy = """def sharesBelow|\.remove\(0|while \(\w+\.length > """.r
+    val copies = srcs.collect {
+      case (f, src) if f != "BucketGate.scala" && copy.findFirstIn(src).nonEmpty => f
+    }.sorted
+    assert(copies.isEmpty, s"hand-rolled bucket-member pairing (use BucketGate): $copies")
+    assert(srcs.exists { case (f, src) => f == "BucketGate.scala" && src.contains("def sharesBelow") })
+  }
 }

@@ -2482,6 +2482,129 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
   }
 
+  test("StreamDedup.candidates (unbounded) survives a checkpointed stop/restart") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dup = "the quick brown fox jumps over the lazy dog while the " +
+      "cat watches from a warm windowsill nearby in silence today"
+    val filler = "unrelated municipal drainage committee minutes concerning " +
+      "culvert inspection rotas and the allocation of gravel stockpiles"
+    val ckpt = TempDirs("dedupu_ckpt")
+    val outDir = TempDirs("dedupu_out")
+    val mem = MemoryStream[(Long, String)]
+    def start() = graft.streaming.StreamDedup.candidates(
+        mem.toDF().toDF("doc_id", "text")).toDF()
+      .writeStream.format("parquet").option("path", outDir)
+      .option("checkpointLocation", ckpt).outputMode("append").start()
+    // batch 1 before the stop: doc 1 enters band state, no pair yet
+    val q1 = start()
+    try { mem.addData((1L, dup), (3L, filler)); q1.processAllAvailable() }
+    finally q1.stop()
+    // restart: doc 2's arrival must pair with doc 1 FROM THE CHECKPOINT,
+    // elected on exactly one band
+    val q2 = start()
+    try {
+      mem.addData((2L, dup)); q2.processAllAvailable()
+      val got = spark.read.parquet(outDir).select("id1", "id2").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(got == Seq((1L, 2L)), s"expected exactly one (1,2) across the restart: $got")
+    } finally q2.stop()
+  }
+
+  /** Identical payloads: every doc shares every band bucket of the image
+    * lane, so a bucket's ring is exactly its newest members. */
+  private val phashStopBand =
+    Array.tabulate(300)(i => ('a' + (i * 7 + i / 13) % 26).toChar).mkString
+
+  /** Identical clips: every doc shares every frame-hash bucket. */
+  private val videoStopFrame =
+    Array.tabulate(400)(i => ('a' + (i * 11 + i / 7) % 26).toChar).mkString
+
+  /** Drives `gate` over 4 identical docs, stops, restarts from the
+    * checkpoint (with `capAfter` set when given) and feeds doc 5; returns
+    * the pairs doc 5 completed. */
+  private def phashRestart(tag: String, text: String, capBefore: Option[Int],
+      capAfter: Option[Int])(
+      gate: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : Set[(Long, Long)] = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val ckpt = TempDirs(s"${tag}_ckpt")
+    val outDir = TempDirs(s"${tag}_out")
+    val mem = MemoryStream[(Long, String)]
+    def start() = gate(mem.toDF().toDF("doc_id", "text"))
+      .writeStream.format("parquet").option("path", outDir)
+      .option("checkpointLocation", ckpt).outputMode("append").start()
+    def withCap[T](cap: Option[Int])(body: => T): T = {
+      cap.foreach(c => spark.conf.set(graft.Conf.PhashGateBucketCapConf, c.toString))
+      try body finally spark.conf.unset(graft.Conf.PhashGateBucketCapConf)
+    }
+    withCap(capBefore) {
+      val q1 = start()
+      try { mem.addData((1L to 4L).map(i => (i, text)): _*); q1.processAllAvailable() }
+      finally q1.stop()
+    }
+    withCap(capAfter) {
+      val q2 = start()
+      try {
+        mem.addData((5L, text)); q2.processAllAvailable()
+        val rows = spark.read.parquet(outDir).select("id1", "id2").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSeq
+        assert(rows.distinct.length == rows.length, s"duplicate elections: $rows")
+        rows.toSet.filter(_._2 == 5L)
+      } finally q2.stop()
+    }
+  }
+
+  test("StreamPhashDedup.hits: the capped ring survives a checkpointed stop/restart") {
+    assert(graft.operators.Multimodal.phash64(phashStopBand).isDefined)
+    // batch 1 overflows cap 2: the checkpointed ring holds only {3, 4}
+    val after = phashRestart("phashcapr", phashStopBand, Some(2), Some(2))(
+      graft.streaming.StreamPhashDedup.distinctPairs(_))
+    assert(after == Set((3L, 5L), (4L, 5L)), s"restarted ring should hold exactly {3,4}: $after")
+  }
+
+  test("StreamPhashDedup: a restart with a smaller cap truncates an oversized ring BEFORE pairing") {
+    // batch 1 runs UNCAPPED (all 4 members checkpointed); the restart at
+    // cap 2 must pair doc 5 against the newest 2 restored members only
+    val after = phashRestart("phashflip", phashStopBand, None, Some(2))(
+      graft.streaming.StreamPhashDedup.distinctPairs(_))
+    assert(after == Set((3L, 5L), (4L, 5L)),
+      s"oversized ring should truncate to {3,4} before pairing: $after")
+  }
+
+  test("StreamPhashDedup.videoHits survives a checkpointed stop/restart") {
+    assert(graft.operators.Multimodal.videoFrameHashes(videoStopFrame).length >= 2)
+    // uncapped: doc 5 meets all 4 checkpointed members
+    val after = phashRestart("videor", videoStopFrame, None, None)(
+      graft.streaming.StreamPhashDedup.distinctVideoPairs(_))
+    assert(after == (1L to 4L).map(i => (i, 5L)).toSet,
+      s"doc 5 should pair with every checkpointed member: $after")
+  }
+
+  test("dedup-gate state layouts are pinned (checkpoint compatibility)") {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.types._
+    import graft.streaming.{StreamDedup => D, StreamEmbDedup => E, StreamPhashDedup => P}
+    // a changed value schema fails every existing gate checkpoint's
+    // state-schema check on restart: change these only with a migration
+    def arr(t: DataType) = ArrayType(t, containsNull = false)
+    def schema(fields: (String, DataType)*) =
+      StructType(fields.map { case (n, t) => StructField(n, t, nullable = true) })
+    val longs = arr(LongType)
+    val ints = arr(IntegerType)
+    assert(Encoders.product[D.PackedBandMembers].schema == schema("ids" -> longs, "pre" -> longs))
+    assert(Encoders.product[D.PackedTimedBandMembers].schema ==
+      schema("ids" -> longs, "pre" -> longs, "tsMs" -> longs))
+    assert(Encoders.product[E.PackedVecMembers].schema == schema("ids" -> longs, "pre" -> ints))
+    assert(Encoders.product[E.PackedTimedVecMembers].schema ==
+      schema("ids" -> longs, "pre" -> ints, "tsMs" -> longs))
+    assert(Encoders.product[P.PackedPhashMembers].schema ==
+      schema("ids" -> longs, "pre" -> ints, "hi" -> longs, "lo" -> longs))
+    assert(Encoders.product[P.PackedVideoMembers].schema ==
+      schema("ids" -> longs, "offs" -> ints, "hsFlat" -> longs))
+  }
+
   test("StreamWindowFunnel: late stragglers dropped at entry; idle users expire") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
