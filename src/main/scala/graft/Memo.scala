@@ -23,20 +23,24 @@ import org.apache.spark.sql.SparkSession
   *     session thrashed recomputes of its HOT keys;
   *   - the compute runs OUTSIDE the lock, so a get of an unrelated key is
   *     never blocked behind a Spark job. Two threads that miss the same key
-  *     may both compute; the first value stored is the one both return. */
+  *     may both compute; the first value stored is the one both return;
+  *   - a computed value that fails `keep` is returned but never stored, so
+  *     every get of its key computes again. */
 final class Memo[V <: AnyRef](cap: Int, perSession: Boolean) {
   private val entries = new java.util.LinkedHashMap[String, V](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean = size() > cap
   }
 
-  def get(s: SparkSession, dir: String, tag: String = "")(compute: => V): V = {
+  def get(s: SparkSession, dir: String, tag: String = "", keep: V => Boolean = (_: V) => true)
+      (compute: => V): V = {
     val key = (if (perSession) Registry.sessionToken(s) + "|" else "") + dir + "|" +
       Registry.dirFingerprint(s, dir) + "|" + tag
     val hit = entries.synchronized(entries.get(key))
     if (hit != null) hit
     else {
       val v = compute
-      entries.synchronized {
+      if (!keep(v)) v
+      else entries.synchronized {
         val prev = entries.get(key)
         if (prev != null) prev else { entries.put(key, v); v }
       }

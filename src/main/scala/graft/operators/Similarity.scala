@@ -1969,6 +1969,10 @@ object Similarity {
     s"$root/$tag"
   }
 
+  /** The frozen-model twin of [[annIndexDir]]: the index the upsert lanes
+    * build without the withheld slice ([[upsertIsNew]]) and extend. */
+  private[graft] def frozenIndexDir(d: String): String = annIndexDir(d) + "-frozen"
+
   /** Runs the IVFPQ training + encode ONCE and writes the three artifact
     * tables [[annIvfPq]] otherwise rebuilds per invocation. `keep`
     * restricts BOTH training and the encoded corpus to a subset — the
@@ -2121,7 +2125,7 @@ object Similarity {
     "ann_index_upsert",
     (s, d) => {
       import s.implicits._
-      val dir = annIndexDir(d) + "-frozen"
+      val dir = frozenIndexDir(d)
       if (!new java.io.File(s"$dir/corpus_codes.parquet").exists())
         writeAnnIndex(s, d, dir, keep = Some(!upsertIsNew))
       val (cents, books) = loadAnnModel(s, dir)
@@ -2152,7 +2156,7 @@ object Similarity {
     * upsert-adjacent lanes, so each query is self-contained under a fresh
     * JVM. Returns the artifact directory. */
   private def ensureFrozenWithSegment(s: SparkSession, d: String): String = {
-    val dir = annIndexDir(d) + "-frozen"
+    val dir = frozenIndexDir(d)
     if (!new java.io.File(s"$dir/corpus_codes.parquet").exists())
       writeAnnIndex(s, d, dir, keep = Some(!upsertIsNew))
     if (!new java.io.File(s"$dir/upsert_codes.parquet").exists()) {

@@ -1385,8 +1385,10 @@ object VectorExpressions {
   * ([[GraftExtensions.installCodegenCache]]), so repeated `graft_run` calls
   * in one session stop recompiling: Spark's 100-entry default evicts most
   * of a 10-key mix's classes between calls. It also lets later sessions
-  * share the executor's class loader ([[GraftExtensions.installSharedClassLoader]]),
-  * so a query compiled in one session is a cache hit in every other. */
+  * share the executor's class loader, so a query compiled in one session is
+  * a cache hit in every other, and it names generated classes without their
+  * stage id, so a stage that AQE numbers differently in another run is a
+  * cache hit too ([[GraftExtensions.installContextDefaults]]). */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
@@ -1401,7 +1403,7 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       val sc = org.apache.spark.SparkContext.getOrCreate()
       graft.io.ForkFreeLocalFs.install(sc.hadoopConfiguration)
       GraftExtensions.installCodegenCache(sc)
-      GraftExtensions.installSharedClassLoader(sc)
+      GraftExtensions.installContextDefaults(sc)
     }
     def info(name: String, usage: String) =
       new ExpressionInfo(classOf[GraftExtensions].getName, name, usage)
@@ -1428,11 +1430,11 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       (exprs: Seq[Expression]) => SpaceSegCount(exprs.head)))
     // The SERVING surface for the whole operator library: graft_run('name')
     // is a table-valued function splicing the named operator's LOGICAL plan
-    // into the calling query (the Greenplum poll-and-SELECT role,
-    // /root/reference/demo/05_gpdb_poll.sh). Lazy like a view: predicates
-    // and projections written around it still optimize into the scans. The
-    // data dir comes from the spark.graft.dataDir conf unless passed as a
-    // second argument.
+    // into the calling query (the Greenplum poll-and-SELECT role of the
+    // reference demo). Predicates and projections written around it still
+    // optimize into the scans; the plan is built once per session, key and
+    // data state (GraftSql.run). The data dir comes from the
+    // spark.graft.dataDir conf unless passed as a second argument.
     ext.injectTableFunction((FunctionIdentifier("graft_run"),
       info("graft_run",
         "graft_run(name[, dir]) - table of the named graft operator's output over dir (default conf spark.graft.dataDir)"),
@@ -1449,25 +1451,44 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
           else spark.conf.getOption(graft.GraftSql.DataDirConf).getOrElse(
             throw new IllegalArgumentException(
               s"graft_run('$name'): set ${graft.GraftSql.DataDirConf} or pass a directory argument"))
-        graft.GraftSql.run(spark, name, dir).queryExecution.logical
+        graft.GraftSql.run(spark, name, dir)
       }))
   }
 }
 
 object GraftExtensions extends org.apache.spark.internal.Logging {
-  import org.apache.spark.sql.internal.SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED
+  import org.apache.spark.sql.internal.SQLConf.{ARTIFACTS_SESSION_ISOLATION_ENABLED,
+    WHOLESTAGE_CODEGEN_USE_ID_IN_CLASS_NAME}
   import org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES
 
   /** Codegen cache entries for the whole operator library: one pass over the
     * registry compiles 2 581 classes at sf0.01 (`ann_*` left out). */
   val CodegenCacheEntries = 4000
 
+  /** Keys graft sets in the context's conf where they are unset, so every
+    * session built afterwards copies them; a deployment's own value is kept.
+    *   - Artifact isolation off: sessions built afterwards (`newSession()`,
+    *     a stream's `cloneSession()`, a server's per-connection sessions) run
+    *     their tasks under the executor's default class loader. The JVM-wide
+    *     codegen cache is keyed by that loader: with isolation on, each
+    *     session's tasks get a loader of their own and recompile every class.
+    *     graft adds no per-session artifacts.
+    *   - Stage ids out of class names: every whole-stage class is named
+    *     `GeneratedIterator`. The codegen cache is keyed by the class source,
+    *     and AQE numbers a query's stages in the order it re-plans finished
+    *     ones, so the same stage got another name, and compiled again, in a
+    *     later run of the same query. The cost: a stack trace no longer names
+    *     the stage. */
+  private val contextDefaults = Map(
+    ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false",
+    WHOLESTAGE_CODEGEN_USE_ID_IN_CLASS_NAME.key -> "false")
+
   /** Session-builder options of graft's own mains: the fork-free `file:`
-    * filesystem, the sized codegen cache and the shared class loader, all
-    * in the context's conf from its start. */
+    * filesystem, the sized codegen cache, the shared class loader and stable
+    * class names, all in the context's conf from its start. */
   val sparkConf: Map[String, String] =
-    graft.io.ForkFreeLocalFs.sparkConf + (CODEGEN_CACHE_MAX_ENTRIES.key -> CodegenCacheEntries.toString) +
-      (ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false")
+    graft.io.ForkFreeLocalFs.sparkConf + (CODEGEN_CACHE_MAX_ENTRIES.key -> CodegenCacheEntries.toString) ++
+      contextDefaults
 
   private val warned = new java.util.concurrent.atomic.AtomicBoolean(false)
 
@@ -1491,14 +1512,6 @@ object GraftExtensions extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Turns Spark's per-session artifact isolation off in the context's conf
-    * where the key is unset, so sessions built afterwards (`newSession()`, a
-    * stream's `cloneSession()`, a server's per-connection sessions) run their
-    * tasks under the executor's default class loader. The JVM-wide codegen
-    * cache is keyed by that loader: with isolation on, each session's tasks
-    * get a loader of their own and recompile every class. graft adds no
-    * per-session artifacts; a deployment that does keeps its own `true`. */
-  private[plans] def installSharedClassLoader(sc: org.apache.spark.SparkContext): Unit =
-    if (!sc.getConf.contains(ARTIFACTS_SESSION_ISOLATION_ENABLED.key))
-      Bridge.setContextConf(sc, ARTIFACTS_SESSION_ISOLATION_ENABLED.key, "false")
+  private[plans] def installContextDefaults(sc: org.apache.spark.SparkContext): Unit =
+    contextDefaults.foreach { case (k, v) => if (!sc.getConf.contains(k)) Bridge.setContextConf(sc, k, v) }
 }

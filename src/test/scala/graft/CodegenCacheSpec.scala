@@ -67,6 +67,18 @@ class CodegenCacheSpec extends AnyFunSuite {
     assert(extensions._1("isolation") == "false", extensions._1)
   }
 
+  test("graft's extensions name classes without stage ids: a renumbered query compiles nothing") {
+    val (r, _) = extensions
+    assert(r("useId") == "false", r)
+    assert(r("renumbered") == "0", r)
+  }
+
+  test("an explicit useIdInClassName=true is kept, and a renumbered query recompiles") {
+    val (r, _) = child("named")
+    assert(r("useId") == "true", r)
+    assert(r("renumbered").toInt > 0, r)
+  }
+
   test("extensions applied after code was compiled set nothing and warn once") {
     val (r, warnings) = child("late")
     assert(r("contextConf") == "unset")
@@ -77,13 +89,16 @@ class CodegenCacheSpec extends AnyFunSuite {
 }
 
 /** One session per mode, then 160 distinct one-class queries run twice, and
-  * for "extensions" and "isolated" once more in a `newSession()`; prints
-  * `RESULT` with the session's cache size, the context's artifact isolation
-  * and each pass's compiles. */
+  * for "extensions" and "isolated" once more in a `newSession()`; then the
+  * union of two aggregations, and the same union with its branches swapped,
+  * which gives each stage another AQE stage id. Prints `RESULT` with the
+  * session's cache size, the context's artifact isolation and class-name
+  * conf, each pass's compiles and the swapped union's compiles. */
 object CodegenCacheChild {
   def main(args: Array[String]): Unit = {
     val key = "spark.sql.codegen.cache.maxEntries"
     val isolation = "spark.sql.artifact.isolation.enabled"
+    val useId = "spark.sql.codegen.useIdInClassName"
     def builder = SparkSession.builder().master("local[2]")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.shuffle.partitions", "2")
@@ -93,6 +108,7 @@ object CodegenCacheChild {
       case "extensions" => extended.getOrCreate()
       case "explicit" => extended.config(key, "50").getOrCreate()
       case "isolated" => extended.config(isolation, "true").getOrCreate()
+      case "named" => extended.config(useId, "true").getOrCreate()
       case "late" =>
         builder.getOrCreate().range(3).selectExpr("id + 1").collect()
         // spark.sql.extensions is read from the context's conf, so a later
@@ -111,9 +127,15 @@ object CodegenCacheChild {
     val first = pass(spark)
     val second = pass(spark)
     val newSession = if (Set("extensions", "isolated")(args(0))) pass(spark.newSession()).toString else "-"
+    def agg(mod: Int) = spark.range(0, 64, 1, 2).selectExpr(s"id % $mod AS k", "id").groupBy("k").sum("id")
+    agg(7).union(agg(5)).collect()
+    val c0 = compiles
+    agg(5).union(agg(7)).collect()
+    val renumbered = compiles - c0
     def context(k: String) = spark.sparkContext.getConf.getOption(k).getOrElse("unset")
     println(s"RESULT maxEntries=${spark.conf.get(key)} contextConf=${context(key)} " +
-      s"isolation=${context(isolation)} firstPass=$first secondPass=$second newSession=$newSession")
+      s"isolation=${context(isolation)} useId=${context(useId)} firstPass=$first secondPass=$second " +
+      s"newSession=$newSession renumbered=$renumbered")
     spark.stop()
   }
 }

@@ -413,7 +413,7 @@ class PipelineSpec extends SparkSpec {
     assert(manifest.keySet == Set("base_codes", "total_codes", "upsert_codes"), manifest.toString)
     assert(manifest("upsert_codes") == nNew, s"segment rows: ${manifest("upsert_codes")} != $nNew")
     assert(manifest("total_codes") == nAll, "base ∪ segment must cover every vector")
-    val dir = Similarity.annIndexDir(sfDir) + "-frozen"
+    val dir = Similarity.frozenIndexDir(sfDir)
     val (cents, books) = Similarity.loadAnnModel(spark, dir)
     def keyed(df: org.apache.spark.sql.DataFrame) = df
       .select(col("vec_id"), col("cell"), concat_ws(",", col("codes")).as("cs"))
@@ -445,7 +445,7 @@ class PipelineSpec extends SparkSpec {
     assert(manifest("compacted_codes")._1 == nAll, "compacted table must cover every vector")
     assert(manifest("merged_segments")._2.endsWith("overwrites=0"),
       s"expected disjoint base/segment: ${manifest("merged_segments")._2}")
-    val dir = Similarity.annIndexDir(sfDir) + "-frozen"
+    val dir = Similarity.frozenIndexDir(sfDir)
     def keyed(df: org.apache.spark.sql.DataFrame) = df
       .select(col("vec_id"), col("cell"), concat_ws(",", col("codes")).as("cs"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sortBy(_._1).toSeq

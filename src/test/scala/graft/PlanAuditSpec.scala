@@ -1070,4 +1070,30 @@ class PlanAuditSpec extends SparkSpec {
     assert(copies.isEmpty, s"hand-rolled bucket-member pairing (use BucketGate): $copies")
     assert(srcs.exists { case (f, src) => f == "BucketGate.scala" && src.contains("def sharesBelow") })
   }
+
+  test("operators read nothing graft_run's memo key misses: no env, wall clock or unseeded randomness") {
+    // GraftSql.run keys a built plan on the data dir, the ANN index dirs and
+    // the session conf; an operator reading another input must extend that key
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/operators"))
+    val srcs = try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p)).toList
+      finally walk.close()
+    // the one allowed env read: the index root in Similarity.annIndexDir
+    val annIndexDir = """(?s)  private\[graft\] def annIndexDir\(.*?\n  \}\n""".r
+    val (_, sim) = srcs.find(_._1 == "Similarity.scala").get
+    val allowed = annIndexDir.findFirstIn(sim).getOrElse(fail("Similarity.annIndexDir not found"))
+    assert(allowed.contains("sys.env.getOrElse(\"SPARK_GRAFT_INDEX_DIR\""), allowed)
+    val banned = Seq(
+      "env or system property" -> """sys\.env|sys\.props|System\.getenv|System\.getProperty""".r,
+      "wall clock" -> """currentTimeMillis|nanoTime|\bnow\(\)""".r,
+      "unseeded randomness" -> """\brandn?\(\s*\)|\buuid\(\s*\)|\bshuffle\(|randomUUID|new (scala\.util\.)?Random\(\s*\)""".r)
+    val found = for {
+      (f, src) <- srcs
+      text = if (f == "Similarity.scala") src.replace(allowed, "") else src
+      (what, re) <- banned
+      m <- re.findAllIn(text).toSeq
+    } yield s"$f: $what ($m)"
+    assert(found.isEmpty, s"inputs outside graft_run's memo key (extend GraftSql.run's key):\n${found.mkString("\n")}")
+  }
 }

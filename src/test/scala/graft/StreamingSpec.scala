@@ -3185,7 +3185,7 @@ class StreamingSpec extends SparkSpec {
     import graft.plans.VectorExpressions
     // bootstrap the frozen artifact (base = corpus minus the withheld slice)
     Similarity.annIndexUpsert.fn(spark, sfDir).collect()
-    val dir = Similarity.annIndexDir(sfDir) + "-frozen"
+    val dir = Similarity.frozenIndexDir(sfDir)
     val (cents, books) = Similarity.loadAnnModel(spark, dir)
     val segRoot = TempDirs("segs")
     val ckpt = TempDirs("segs-ckpt")
