@@ -1,5 +1,7 @@
 package graft
+import java.util.concurrent.TimeoutException
 import scala.util.control.NonFatal
+import org.apache.spark.sql.graftbridge.Bridge
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -67,15 +69,6 @@ object Bench {
         }
       }
     })
-    // the listener bus is async: drain it before reading the counters so a
-    // query's last stages don't land in the NEXT query's numbers (private
-    // API, via reflection; a 100 ms grace period if the shape ever moves)
-    def drainListenerBus(): Unit =
-      try {
-        val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-          .invoke(spark.sparkContext)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch { case NonFatal(_) => Thread.sleep(100) }
     // Crashed queries must not masquerade as ~0.08 s successes (round 8: 24
     // analysis failures flattered the total). Track them and report a
     // "failed" list in both the stdout line and bench_detail.json.
@@ -95,7 +88,11 @@ object Bench {
           String.valueOf(e.getMessage).take(300))
       }
       val t = (System.nanoTime() - t0) / 1e9
-      drainListenerBus()
+      // the listener bus is async: drain it before reading the counters so
+      // a query's last stages don't land in the NEXT query's numbers
+      try Bridge.drainListenerBus(spark.sparkContext)
+      catch { case e: TimeoutException =>
+        System.err.println(s"[bench] $name: spill counters may be incomplete: $e") }
       metrics(name) = (spillMem.get, spillDisk.get, peakMem.get)
       // Drop THIS query's cached frames before the next query runs (outside
       // its timed window — the blocks are this query's debris, not the

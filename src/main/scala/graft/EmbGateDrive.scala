@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Measurement harness for the STREAMING EMBEDDING dedup gate alone —
   * the emb-gate slice of [[StreamDemo]] (same RocksDB/changelog session
-  * shape, same pre-normed store + bounded file feed + confirm join),
-  * without the CDC drain / text gate / ANN stages around it, so a
-  * recall-vs-cap point costs one gate drain instead of a full demo.
+  * shape, same pre-normed store + bounded file feed + confirm join, the
+  * same [[Drive.gate]] drain), without the CDC drain / text gate / ANN
+  * stages around it, so a recall-vs-cap point costs one gate drain
+  * instead of a full demo.
   *
   * Built for the r16 verdict's two open measurements:
   *
@@ -34,19 +34,20 @@ import org.apache.spark.sql.streaming.Trigger
   *     denominator for every order.
   *
   *  2. **Capped-ring checkpoint restore at scale** (verdict #6):
-  *     `SPARK_GRAFT_KILL_AT_BATCH=n` stops the query after its n-th
+  *     `SPARK_GRAFT_KILL_AT_BATCH=n` stops the query as soon as its n-th
   *     micro-batch commits and restarts it from the checkpoint to
   *     finish the drain — batch boundaries are file-deterministic
   *     (maxFilesPerTrigger over a fixed file set), so the completed
   *     pair set must EQUAL the uninterrupted run's, and the post-restart
   *     per-batch times expose any RocksDB-restore cliff.
   *
-  * Prints one JSON line: pair count, per-batch telemetry, gate seconds.
+  * Prints one JSON line: pair count, the requested kill (`killed_at`) and
+  * the last batch the first run committed (`stopped_after`, null without a
+  * kill), per-batch telemetry ([[Drive.Batch]]), gate seconds.
   */
 object EmbGateDrive {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/data/sf10")
-    val cpus = Session.cpus.toString
     val order = sys.env.getOrElse("SPARK_GRAFT_FEED_ORDER", "local")
     val killAtBatch = sys.env.getOrElse("SPARK_GRAFT_KILL_AT_BATCH", "0").toInt
     // non-empty -> drive the RETENTION-BOUNDED lane (candidatesBounded)
@@ -63,8 +64,6 @@ object EmbGateDrive {
     val workDir = WorkDir.fromEnv("graft_emb_gate")
     val work = workDir.path
     val dot = graft.plans.VectorExpressions.floatDot _
-    val gateParts = sys.env.getOrElse("SPARK_GRAFT_GATE_PARTITIONS", cpus)
-    val feedFiles = 64
 
     val vecs = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
     vecs.withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
@@ -89,14 +88,14 @@ object EmbGateDrive {
       if (bounded.isEmpty) df
       else df.withColumn("ts", timestamp_seconds(secs))
     def feed = order match {
-      case "tiled" => withTs(vecs, col("vec_id")).repartition(feedFiles)
+      case "tiled" => withTs(vecs, col("vec_id")).repartition(Drive.FeedFiles)
       case "local" =>
         withTs(
           vecs
             .withColumn("base", pmod(col("vec_id"), lit(baseMod)))
             .withColumn("hist", (col("vec_id") / lit(baseMod)).cast("long")),
           col("base") * 4096 + col("hist"))
-          .repartitionByRange(feedFiles, col("base"), col("hist"))
+          .repartitionByRange(Drive.FeedFiles, col("base"), col("hist"))
           .drop("base", "hist")
       case other => sys.error(s"unknown SPARK_GRAFT_FEED_ORDER: $other")
     }
@@ -119,7 +118,6 @@ object EmbGateDrive {
     }
 
     val feedDf = spark.read.parquet(s"$work/vecs_feed")
-    val feedSchema = feedDf.schema
     val nVecs = feedDf.count()
     // SPARK_GRAFT_PLANES overrides the corpus-derived bucket bits — the
     // r19 shard measurements use fewer planes to reproduce the sf100
@@ -130,70 +128,30 @@ object EmbGateDrive {
     val cap = Conf.int(spark, Conf.EmbGateBucketCapConf, 0)
     val gateShards = Conf.int(spark, Conf.EmbGateShardsConf, 1)
     System.err.println(s"[embgate] n=$nVecs planes=$embPlanes cap=$cap " +
-      s"shards=$gateShards order=$order baseMod=$baseMod gateParts=$gateParts " +
+      s"shards=$gateShards order=$order baseMod=$baseMod gateParts=${Drive.gateParts} " +
       s"bounded=${if (bounded.isEmpty) "no" else bounded} work=$work")
 
     def secsSince(t0: Long): Double =
       math.round((System.nanoTime() - t0) / 1e7) / 100.0
 
-    def startGate() = {
-      spark.conf.set("spark.sql.shuffle.partitions", gateParts)
-      def stream = spark.readStream.schema(feedSchema)
-        .option("maxFilesPerTrigger", "4")
-        .option("cleanSource", "delete").parquet(s"$work/vecs_feed")
-      def store = spark.read.parquet(s"$work/normed_store")
-      try (if (bounded.isEmpty)
-          graft.streaming.StreamEmbDedup.distinctPairs(
-            stream, store, nPlanes = embPlanes)
-        else
-          graft.streaming.StreamEmbDedup.distinctPairsBounded(
-            stream, store, bounded, nPlanes = embPlanes))
-        .writeStream
-        .format("parquet")
-        .option("path", s"$work/emb_pairs")
-        .option("checkpointLocation", s"$work/ckpt_embdedup")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", cpus)
-    }
-
-    val batchLog = scala.collection.mutable.ArrayBuffer.empty[String]
-    def drainLogged(tag: String, killAt: Int): Boolean = {
-      val q = startGate()
-      var killed = false
-      try {
-        if (killAt > 0) {
-          // poll commits; stop() after the killAt-th batch completes —
-          // the mid-feed kill a production restart recovers from
-          while (!killed && q.isActive) {
-            Thread.sleep(1000)
-            val done = q.recentProgress.count(_.numInputRows > 0)
-            if (done >= killAt) { q.stop(); killed = true }
-          }
-          q.awaitTermination()
-        } else q.awaitTermination()
-      } finally {
-        q.recentProgress.filter(_.numInputRows > 0).foreach { p =>
-          batchLog += s"""{"phase":"$tag","batch":${p.batchId},"rows":${p.numInputRows},"secs":${p.durationMs.get("triggerExecution").toDouble / 1000.0}}"""
-        }
-      }
-      killed
-    }
-
     val tGate = System.nanoTime()
-    val killed = drainLogged("run1", killAtBatch)
-    if (killed) {
-      System.err.println(s"[embgate] killed after batch $killAtBatch; restarting from checkpoint")
-      drainLogged("resumed", 0)
+    val batches = Drive.gate(spark, s"$work/vecs_feed", 4, s"$work/emb_pairs", killAtBatch) { stream =>
+      def store = spark.read.parquet(s"$work/normed_store")
+      if (bounded.isEmpty)
+        graft.streaming.StreamEmbDedup.distinctPairs(stream, store, nPlanes = embPlanes)
+      else
+        graft.streaming.StreamEmbDedup.distinctPairsBounded(stream, store, bounded, nPlanes = embPlanes)
     }
     val gateSecs = secsSince(tGate)
+    val stoppedAfter =
+      if (killAtBatch > 0) batches.filter(_.phase == "run1").lastOption.fold("null")(_.id.toString)
+      else "null"
 
     val nPairs = spark.read.parquet(s"$work/emb_pairs").count()
     val distinctPairs = spark.read.parquet(s"$work/emb_pairs")
       .select("id1", "id2").distinct().count()
-    println(s"""{"metric":"emb_gate_drive","sf_dir":"$sfDir","order":"$order","cap":$cap,"shards":$gateShards,"planes":$embPlanes,"n_vecs":$nVecs,"bounded":"$bounded","emb_pairs":$nPairs,"emb_pairs_distinct":$distinctPairs,"killed_at":$killAtBatch,"gate_secs":$gateSecs,"batches":[${batchLog.mkString(",")}],"dir":"$work"}""")
-    workDir.clean("normed_store", "vecs_feed", "emb_pairs", "ckpt_embdedup")
+    println(s"""{"metric":"emb_gate_drive","sf_dir":"$sfDir","order":"$order","cap":$cap,"shards":$gateShards,"planes":$embPlanes,"n_vecs":$nVecs,"bounded":"$bounded","emb_pairs":$nPairs,"emb_pairs_distinct":$distinctPairs,"killed_at":$killAtBatch,"stopped_after":$stoppedAfter,"gate_secs":$gateSecs,"batches":[${batches.map(_.json).mkString(",")}],"dir":"$work"}""")
+    workDir.clean("normed_store", "emb_pairs")
     spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.file.Files
-
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -10,7 +9,11 @@ import graft.streaming.MaxwellStream
 /** End-to-end streaming CDC drive: renders the `events` table as Maxwell
   * JSON lines on disk, streams them through parse -> replica changelog ->
   * replica and archive exactly as a production deployment would (file
-  * source stands in for the queue), and prints one JSON summary line.
+  * source stands in for the queue), then drains the five ingest dedup
+  * gates (text, embedding, image, audio, video) one after another through
+  * [[Drive.gate]], checks each pair set against its batch twin, serves
+  * streamed ANN queries, and prints one JSON summary line. Its work dir is
+  * a fresh temp dir, deleted before the line is printed.
   *
   * Usage: runMain graft.StreamDemo [sfDir]
   */
@@ -23,7 +26,8 @@ object StreamDemo {
     val spark = Session.local(extra = Session.StreamingState)
     import spark.implicits._
 
-    val work = Files.createTempDirectory("graft_stream_demo").toString
+    val workDir = WorkDir.temp("graft_stream_demo")
+    val work = workDir.path
 
     // Stage timing + state-store telemetry (round 13): the summary line
     // reports events/sec for the CDC drain and the dedup gates' state
@@ -31,14 +35,10 @@ object StreamDemo {
     // throughput and state-size EVIDENCE, not just row counts.
     def secsSince(t0: Long): Double =
       math.round((System.nanoTime() - t0) / 1e7) / 100.0
-    // (rows, bytes) from the LAST progress carrying state operators —
-    // state grows monotonically under AvailableNow, so last = peak.
-    def stateStats(q: org.apache.spark.sql.streaming.StreamingQuery): (Long, Long) =
-      q.recentProgress.reverseIterator
-        .map(p => p.stateOperators.map(s => (s.numRowsTotal, s.memoryUsedBytes)))
-        .collectFirst { case ops if ops.nonEmpty =>
-          (ops.map(_._1).sum, ops.map(_._2).sum) }
-        .getOrElse((0L, 0L))
+    // (rows, bytes) of a gate's LAST batch — state grows monotonically
+    // under AvailableNow, so last = peak.
+    def stateStats(batches: Seq[Drive.Batch]): (Long, Long) =
+      batches.lastOption.fold((0L, 0L))(b => (b.stateRows, b.stateBytes))
 
     // 1. Render the event table as Maxwell JSON lines (the queue payload),
     //    plus a few pk-less DML events a real binlog can contain — they
@@ -126,68 +126,24 @@ object StreamDemo {
     //    whole corpus. Docs stream from a file source (the queue stand-in)
     //    through the LSH gate; confirmed pairs must equal the batch
     //    dedup_minhash_lsh answer.
-    // BOUNDED micro-batches (round 13, found at sf100): a file source with
-    // default options delivers the ENTIRE backlog as ONE micro-batch —
-    // logOffset 0 held all 2M vectors / 5M docs, and that single batch's
-    // flatMap+join+sort footprint (not the state) is what exhausted the
-    // heap. A real queue delivers bounded batches; maxFilesPerTrigger over
-    // a 64-file feed is the file-source spelling of that, and
-    // Trigger.AvailableNow drains the backlog through it batch by batch.
-    val feedFiles = 64
-    val filesPerTrigger = "8"
-    // GATE state-partition count (round 15, found by jstack on the sf100
-    // drive): a stateful query's partition count FREEZES at checkpoint
-    // birth, and the tiled corpus's lumpy LSH buckets concentrate
-    // candidate volume — at 16 partitions (= cpus) 1-2 tasks carried each
-    // emb micro-batch while 14 threads idled. A deployment sizes state
-    // partitions for SKEW, not for the box: set SPARK_GRAFT_GATE_PARTITIONS
-    // above the core count to spread hot buckets across more tasks. The
-    // CDC queries above keep the cpus-sized checkpoints they were born
-    // with; default = cpus (today's measured behavior).
-    val gateParts = sys.env.getOrElse("SPARK_GRAFT_GATE_PARTITIONS", cpus)
-    // SCOPED to each gate's query start (round 16, r15 advice): start()
-    // clones the session with the conf snapshot, which is all the
-    // state-partition birth (and the gate's own micro-batch shuffles)
-    // needs — a session-global set would also resize every later BATCH
-    // shuffle (shingled-archive build, ANN parity joins) to gateParts.
-    def withGateParts[T](body: => T): T = {
-      spark.conf.set("spark.sql.shuffle.partitions", gateParts)
-      try body finally spark.conf.set("spark.sql.shuffle.partitions", cpus)
-    }
+    // (the CDC queries above keep the cpus-sized checkpoints they were born
+    // with; only the gates take Drive.gateParts state partitions)
+    val filesPerTrigger = 8
     val docsTbl = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     docsTbl.as[(Long, String)]
       .map { case (id, t) => (id, graft.operators.Dedup.hashedShingleSet(t).toSeq) }
       .toDF("doc_id", "hsh")
       .write.mode("overwrite").parquet(s"$work/shingled_archive")
-    docsTbl.repartition(feedFiles).write.mode("overwrite").parquet(s"$work/docs_feed")
+    Drive.writeFeed(docsTbl, s"$work/docs_feed")
     val shingled = spark.read.parquet(s"$work/shingled_archive")
-    // cleanSource=delete: SINGLE-reader feed, so consumed files are safe
-    // to drop as each micro-batch commits — the feed never holds its full
-    // size through the drain (the bounded deleted-as-consumed queue shape)
-    val dedupQ = withGateParts {
-      graft.streaming.StreamDedup.distinctPairs(
-          spark.readStream.schema(docsTbl.schema)
-            .option("maxFilesPerTrigger", filesPerTrigger)
-            .option("cleanSource", "delete").parquet(s"$work/docs_feed"),
-          shingled)
-        .writeStream
-        .format("parquet")
-        .option("path", s"$work/dup_pairs")
-        .option("checkpointLocation", s"$work/ckpt_dedup")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
     // gates drain SEQUENTIALLY: two corpus-sized backlogs sharing one
     // JVM's execution memory is a demo artifact (production runs them as
     // separate jobs); sequential = each gate gets the full heap
-    dedupQ.awaitTermination()
-    // the doc gate is done: its archive, checkpoint (12 GB of RocksDB
-    // versions at sf100 even with changelog+retain=2) and any unconsumed
-    // feed remnants free BEFORE the embedding gate needs the disk
+    val dedupBatches = Drive.gate(spark, s"$work/docs_feed", filesPerTrigger, s"$work/dup_pairs")(
+      graft.streaming.StreamDedup.distinctPairs(_, shingled))
+    // the doc gate is done: its archive frees BEFORE the embedding gate
+    // needs the disk (Drive.gate already dropped its feed and checkpoint)
     dropDir(s"$work/shingled_archive", "shingled_archive")
-    dropDir(s"$work/docs_feed", "docs_feed")
-    dropDir(s"$work/ckpt_dedup", "ckpt_dedup")
     // embedding gate over a pre-normed store; the sf corpora carry no
     // cos >= 0.9 pairs, so three near-identical vectors are planted —
     // the gate must confirm exactly those through the stored norms
@@ -213,7 +169,7 @@ object StreamDemo {
         .toDF("vec_id", "embedding"))
     vecsAll.withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
       .write.mode("overwrite").parquet(s"$work/normed_store")
-    vecsAll.repartition(feedFiles).write.mode("overwrite").parquet(s"$work/vecs_feed")
+    Drive.writeFeed(vecsAll, s"$work/vecs_feed")
     // bucket bits sized to the corpus (the saturation rule): at sf100 the
     // 8-bit default put ~7.8k members in every (table, bucket) group —
     // ~10^11 candidate pairs — and OOM'd the gate; 2M vectors at 64/bucket
@@ -223,84 +179,26 @@ object StreamDemo {
     // the emb gate's confirm joins carry vector payloads across the
     // candidate stream — per-batch shuffle footprint scales with batch
     // size, so it triggers at HALF the doc gate's file count
-    val embQ = withGateParts {
-      graft.streaming.StreamEmbDedup.distinctPairs(
-          spark.readStream.schema(vecsAll.schema)
-            .option("maxFilesPerTrigger", "4")
-            .option("cleanSource", "delete").parquet(s"$work/vecs_feed"),
-          spark.read.parquet(s"$work/normed_store"), nPlanes = embPlanes)
-        .writeStream
-        .format("parquet")
-        .option("path", s"$work/emb_pairs")
-        .option("checkpointLocation", s"$work/ckpt_embdedup")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    embQ.awaitTermination()
+    val embBatches = Drive.gate(spark, s"$work/vecs_feed", 4, s"$work/emb_pairs")(
+      graft.streaming.StreamEmbDedup.distinctPairs(_,
+        spark.read.parquet(s"$work/normed_store"), nPlanes = embPlanes))
     dropDir(s"$work/normed_store", "normed_store")
-    dropDir(s"$work/vecs_feed", "vecs_feed")
-    dropDir(s"$work/ckpt_embdedup", "ckpt_embdedup")
-    // perceptual gates (round 17): the image and video lanes of
+    // perceptual gates (rounds 17-18): the image, audio and video lanes of
     // StreamPhashDedup over their own bounded feeds, each checked
-    // pair-for-pair against its batch twin (mm_phash / unwindowed
-    // mm_video_phash) — the same drain shape as the sibling gates
-    docsTbl.repartition(feedFiles).write.mode("overwrite").parquet(s"$work/phash_feed")
-    val phashQ = withGateParts {
-      graft.streaming.StreamPhashDedup.distinctPairs(
-          spark.readStream.schema(docsTbl.schema)
-            .option("maxFilesPerTrigger", filesPerTrigger)
-            .option("cleanSource", "delete").parquet(s"$work/phash_feed"))
-        .writeStream
-        .format("parquet")
-        .option("path", s"$work/phash_pairs")
-        .option("checkpointLocation", s"$work/ckpt_phash")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
+    // pair-for-pair against its batch twin (mm_phash / the unwindowed
+    // audio and mm_video_phash pair sets) — the same drain shape as the
+    // sibling gates
+    Seq[(String, DataFrame => DataFrame)](
+      "phash" -> (graft.streaming.StreamPhashDedup.distinctPairs(_)),
+      "audio" -> (graft.streaming.StreamPhashDedup.distinctAudioPairs(_)),
+      "video" -> graft.streaming.StreamPhashDedup.distinctVideoPairs
+    ).foreach { case (lane, pairsOf) =>
+      Drive.writeFeed(docsTbl, s"$work/${lane}_feed")
+      Drive.gate(spark, s"$work/${lane}_feed", filesPerTrigger, s"$work/${lane}_pairs")(pairsOf)
     }
-    phashQ.awaitTermination()
-    dropDir(s"$work/phash_feed", "phash_feed")
-    dropDir(s"$work/ckpt_phash", "ckpt_phash")
-    // audio lane (round 18): the fifth modality gate in the drive —
-    // same drain shape, parity vs the unwindowed batch audio pair set
-    docsTbl.repartition(feedFiles).write.mode("overwrite").parquet(s"$work/audio_feed")
-    val audioQ = withGateParts {
-      graft.streaming.StreamPhashDedup.distinctAudioPairs(
-          spark.readStream.schema(docsTbl.schema)
-            .option("maxFilesPerTrigger", filesPerTrigger)
-            .option("cleanSource", "delete").parquet(s"$work/audio_feed"))
-        .writeStream
-        .format("parquet")
-        .option("path", s"$work/audio_pairs")
-        .option("checkpointLocation", s"$work/ckpt_audio")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    audioQ.awaitTermination()
-    dropDir(s"$work/audio_feed", "audio_feed")
-    dropDir(s"$work/ckpt_audio", "ckpt_audio")
-    docsTbl.repartition(feedFiles).write.mode("overwrite").parquet(s"$work/video_feed")
-    val videoQ = withGateParts {
-      graft.streaming.StreamPhashDedup.distinctVideoPairs(
-          spark.readStream.schema(docsTbl.schema)
-            .option("maxFilesPerTrigger", filesPerTrigger)
-            .option("cleanSource", "delete").parquet(s"$work/video_feed"))
-        .writeStream
-        .format("parquet")
-        .option("path", s"$work/video_pairs")
-        .option("checkpointLocation", s"$work/ckpt_video")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    videoQ.awaitTermination()
-    dropDir(s"$work/video_feed", "video_feed")
-    dropDir(s"$work/ckpt_video", "ckpt_video")
     val gatesSecs = secsSince(tGates)
-    val dedupState = stateStats(dedupQ)
-    val embState = stateStats(embQ)
+    val dedupState = stateStats(dedupBatches)
+    val embState = stateStats(embBatches)
     val tAnn = System.nanoTime()
 
     // 4. STREAMING ANN SERVING from the PERSISTED index artifact: build
@@ -327,13 +225,10 @@ object StreamDemo {
     annQ.awaitTermination()
     val annSecs = secsSince(tAnn)
 
-    val streamedPairs = spark.read.parquet(s"$work/dup_pairs")
-      .select(col("id1"), col("id2")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batchPairs = graft.operators.Dedup.dedupMinhashLsh.fn(spark, sfDir)
-      .select(col("id1"), col("id2")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val dedupParity = streamedPairs == batchPairs
-    val embPairs = spark.read.parquet(s"$work/emb_pairs")
-      .select(col("id1"), col("id2")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def streamed(sink: String) = Drive.pairs(spark.read.parquet(s"$work/$sink"))
+    val streamedPairs = streamed("dup_pairs")
+    val dedupParity = streamedPairs == Drive.pairs(graft.operators.Dedup.dedupMinhashLsh.fn(spark, sfDir))
+    val embPairs = streamed("emb_pairs")
     val plantedFound = planted.forall(p => embPairs.contains((p._3, p._1)))
     def hitKey(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("query_id"), r.getAs[Int]("rank"), r.getAs[Long]("neighbor_id"))
@@ -341,28 +236,21 @@ object StreamDemo {
     val batchHits = graft.operators.Similarity.annIndexSearch.fn(spark, sfDir)
       .collect().map(hitKey).toSet
     val annParity = servedHits == batchHits
-    val phashPairs = spark.read.parquet(s"$work/phash_pairs")
-      .select(col("id1"), col("id2")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val phashPairs = streamed("phash_pairs")
     // UNWINDOWED batch twin (r17 advice): the stream gate holds full
     // per-bucket state, so its parity target must not carry the default
     // phashBandMaxDf window (which provably drops pairs at sf10+ —
     // 5,895 of 13.9M — and would report false spuriously); mirrors the
     // video lane's Int.MaxValue target below
-    val phashBatch = graft.operators.Multimodal.bandedHammingPairs(
-        spark, sfDir, graft.operators.Multimodal.phash64, Int.MaxValue)
-      .select(col("id1"), col("id2")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val phashParity = phashPairs == phashBatch
-    val audioPairs = spark.read.parquet(s"$work/audio_pairs")
-      .select(col("id1"), col("id2")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val audioBatch = graft.operators.Multimodal.bandedHammingPairs(
-        spark, sfDir, graft.operators.Multimodal.audioFp64, Int.MaxValue, cacheTag = "audio")
-      .select(col("id1"), col("id2")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val audioParity = audioPairs == audioBatch
-    val videoPairs = spark.read.parquet(s"$work/video_pairs")
-      .select(col("id1"), col("id2")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val videoBatch = graft.operators.Multimodal.videoPhashPairs(spark, sfDir, Int.MaxValue)
-      .select(col("id1"), col("id2")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val videoParity = videoPairs == videoBatch
+    val phashParity = phashPairs == Drive.pairs(graft.operators.Multimodal.bandedHammingPairs(
+      spark, sfDir, graft.operators.Multimodal.phash64, Int.MaxValue))
+    val audioPairs = streamed("audio_pairs")
+    val audioParity = audioPairs == Drive.pairs(graft.operators.Multimodal.bandedHammingPairs(
+      spark, sfDir, graft.operators.Multimodal.audioFp64, Int.MaxValue, cacheTag = "audio"))
+    val videoPairs = streamed("video_pairs")
+    val videoParity = videoPairs ==
+      Drive.pairs(graft.operators.Multimodal.videoPhashPairs(spark, sfDir, Int.MaxValue))
+    workDir.clean()
     val evPerSec = if (drainSecs > 0) math.round(nArchive / drainSecs) else 0L
     println(
       s"""{"metric":"stream_demo","archived":$nArchive,"replica_rows":$nReplica,"rejected":$nRejects,"archive_months":$months,"dup_pairs":${streamedPairs.size},"dedup_batch_parity":$dedupParity,"emb_pairs":${embPairs.size},"emb_planted_found":$plantedFound,"emb_planes":$embPlanes,"phash_pairs":${phashPairs.size},"phash_batch_parity":$phashParity,"audio_pairs":${audioPairs.size},"audio_batch_parity":$audioParity,"video_pairs":${videoPairs.size},"video_batch_parity":$videoParity,"ann_hits":${servedHits.size},"ann_index_parity":$annParity,"render_secs":$renderSecs,"drain_secs":$drainSecs,"events_per_sec":$evPerSec,"gates_secs":$gatesSecs,"ann_secs":$annSecs,"dedup_state_rows":${dedupState._1},"dedup_state_mb":${dedupState._2 / 1048576},"emb_state_rows":${embState._1},"emb_state_mb":${embState._2 / 1048576},"dir":"$work"}""")

@@ -21,4 +21,8 @@ object Bridge {
     * status listener when it copies the context conf. */
   def sessionBuilt(sc: SparkContext): Boolean =
     sc.listenerBus.findListenersByClass[SQLAppStatusListener]().nonEmpty
+
+  /** Waits until every event posted to `sc`'s listener bus so far has been
+    * delivered; throws `TimeoutException` after 10 s. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -1071,6 +1071,22 @@ class PlanAuditSpec extends SparkSpec {
     assert(srcs.exists { case (f, src) => f == "BucketGate.scala" && src.contains("def sharesBelow") })
   }
 
+  test("only graft.Drive drains gates: no hand-rolled drain or progress reader") {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.list(java.nio.file.Paths.get("src/main/scala/graft"))
+    val srcs = try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p)).toList
+      finally walk.close()
+    // the gate-partition env read, a progress poll or a consumed-feed source
+    val drain = """"SPARK_GRAFT_GATE_PARTITIONS"|\brecentProgress\b|"cleanSource"""".r
+    val copies = srcs.collect {
+      case (f, src) if f != "Drive.scala" && drain.findFirstIn(src).nonEmpty => f
+    }.sorted
+    assert(copies.isEmpty, s"hand-rolled gate drain (use graft.Drive.gate): $copies")
+    val (_, drive) = srcs.find(_._1 == "Drive.scala").getOrElse(fail("graft/Drive.scala not found"))
+    assert(drive.contains("\"SPARK_GRAFT_GATE_PARTITIONS\"") && drive.contains("\"cleanSource\""))
+  }
+
   test("operators read nothing graft_run's memo key misses: no env, wall clock or unseeded randomness") {
     // GraftSql.run keys a built plan on the data dir, the ANN index dirs and
     // the session conf; an operator reading another input must extend that key
